@@ -14,7 +14,9 @@ from __future__ import annotations
 
 import glob
 import hashlib
+import json
 import os
+import sys
 
 import pyarrow.parquet as pq
 
@@ -25,6 +27,8 @@ from vcf2parquet_spark.encode import (EncodeOptions, encode,
 from vcf2parquet_spark.decode import decode, verify
 
 N_ROWS = 5_000
+GOLDEN_FILE = os.path.join(os.path.dirname(__file__), "golden",
+                           "encode_blocks.json")
 
 
 def _block_digests(out: str) -> dict[str, str]:
@@ -38,6 +42,63 @@ def _block_digests(out: str) -> dict[str, str]:
             h.update(d)
         per_part[os.path.basename(f)] = h.hexdigest()
     return per_part
+
+
+def _golden_outputs(spark, root: str) -> dict[str, dict]:
+    """Per-part block digests of ``encode`` (a salted multi-unit corpus,
+    and NULLs in the sort columns) and ``encode_clustered`` (rowgroup-
+    range units over two files), each with multi-block units."""
+    df = synth_corpus(spark, 3_000, seed=23, partitions=3)
+    nulls = spark.createDataFrame(
+        [("org/r", f"f{j}.py", f"{j:040x}", "py",
+          None if j % 7 == 0 else f"v{j} = {j}") for j in range(200)],
+        "repo string, path string, commit string, lang string, "
+        "content string")
+    src = os.path.join(root, "src")
+    _write_clustered_input(spark, df, src, row_group_size=300)
+    runs = {
+        "encode": lambda o: encode(
+            spark, df, o, EncodeOptions(target_rows=400, batch_size=250)),
+        "encode_nulls": lambda o: encode(
+            spark, nulls, o,
+            EncodeOptions(target_rows=60, batch_size=20,
+                          sort_columns=("repo", "path", "content"))),
+        "encode_clustered": lambda o: encode_clustered(
+            spark, src, o, EncodeOptions(target_rows=600, batch_size=250)),
+    }
+    got = {}
+    for name, run in runs.items():
+        out = os.path.join(root, name)
+        run(out)
+        got[name] = _block_digests(out)
+    return got
+
+
+def regen() -> None:
+    import tempfile
+
+    from vcf2parquet_spark.session import get_spark
+    spark = get_spark(cores=4, shuffle_partitions=4)
+    with tempfile.TemporaryDirectory() as root:
+        got = _golden_outputs(spark, root)
+    spark.stop()
+    with open(GOLDEN_FILE, "w") as f:
+        json.dump(got, f, indent=1, sort_keys=True)
+    print(f"wrote {GOLDEN_FILE}")
+
+
+def test_golden_block_bytes(spark, tmp_path):
+    """End-to-end block bytes of both encode paths are pinned: any change
+    to planning, sort order, codec selection or kernels that moves a
+    byte must be deliberate (regenerate with:
+    python tests/test_clustered_stream.py regen)."""
+    with open(GOLDEN_FILE) as f:
+        golden = json.load(f)
+    got = _golden_outputs(spark, str(tmp_path))
+    for name in golden:
+        assert len(got[name]) > 1, name
+        assert got[name] == golden[name], name
+    assert set(got) == set(golden)
 
 
 def test_stream_matches_grouped_path_bytes(spark, tmp_path):
@@ -144,3 +205,7 @@ def test_encode_clustered_decode_columns(spark, tmp_path):
     want = spark.read.parquet(src).select("repo", "path", "content")
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+if __name__ == "__main__" and "regen" in sys.argv:
+    regen()
