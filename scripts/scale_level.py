@@ -62,7 +62,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument("--mode",
-                    choices=["clustered", "shuffle", "shuffle_raw"],
+                    choices=["clustered", "shuffle"],
                     required=True)
     ap.add_argument("--rows", type=int, required=True)
     ap.add_argument("--target-rows", type=int, default=3000)
@@ -79,8 +79,7 @@ def main() -> int:
     from vcf2parquet_spark.session import get_spark
 
     runner = {"clustered": bench.bench_encode_clustered,
-              "shuffle": bench.bench_encode,          # packed (default)
-              "shuffle_raw": bench.bench_encode_raw}[args.mode]
+              "shuffle": bench.bench_encode}[args.mode]
     corpus = (f"{bench.WORK_DIR}/corpus_rg_{args.rows}.parquet"
               if args.mode == "clustered"
               else f"{bench.WORK_DIR}/corpus_{args.rows}.parquet")

@@ -1,9 +1,10 @@
-"""Tests for the two round-3 encode paths:
+"""Tests for block bytes and the clustered encode path:
 
-* ``arrow_stream`` (default) — mapInArrow streaming kernel with an
-  in-worker prefetch thread; must be byte-identical to the legacy
-  ``applyInArrow`` grouped path (same partition plan, same in-shuffle
-  sort ⇒ same block bytes and content digests).
+* golden per-part block digests of ``encode`` (one shuffle
+  of packed Arrow-IPC blobs into the mapInArrow streaming kernel) and
+  ``encode_clustered``, generated before the legacy raw-row, grouped
+  ``applyInArrow`` and presort variants were removed — the byte-identity
+  guard for both paths.
 * ``encode_clustered`` — the shuffle-free Iceberg-partition path: work
   units are physical parquet rowgroup ranges read directly by the
   executor's Python worker (mirrors the reference's file-in →
@@ -56,22 +57,15 @@ def _golden_outputs(spark, root: str) -> dict[str, dict]:
         "content string")
     src = os.path.join(root, "src")
     _write_clustered_input(spark, df, src, row_group_size=300)
-    runs = {
-        "encode": lambda o: encode(
-            spark, df, o, EncodeOptions(target_rows=400, batch_size=250)),
-        "encode_nulls": lambda o: encode(
-            spark, nulls, o,
-            EncodeOptions(target_rows=60, batch_size=20,
-                          sort_columns=("repo", "path", "content"))),
-        "encode_clustered": lambda o: encode_clustered(
-            spark, src, o, EncodeOptions(target_rows=600, batch_size=250)),
-    }
-    got = {}
-    for name, run in runs.items():
-        out = os.path.join(root, name)
-        run(out)
-        got[name] = _block_digests(out)
-    return got
+    encode(spark, df, f"{root}/encode",
+           EncodeOptions(target_rows=400, batch_size=250))
+    encode(spark, nulls, f"{root}/encode_nulls",
+           EncodeOptions(target_rows=60, batch_size=20,
+                         sort_columns=("repo", "path", "content")))
+    encode_clustered(spark, src, f"{root}/encode_clustered",
+                     EncodeOptions(target_rows=600, batch_size=250))
+    return {name: _block_digests(f"{root}/{name}")
+            for name in ("encode", "encode_nulls", "encode_clustered")}
 
 
 def regen() -> None:
@@ -99,24 +93,6 @@ def test_golden_block_bytes(spark, tmp_path):
         assert len(got[name]) > 1, name
         assert got[name] == golden[name], name
     assert set(got) == set(golden)
-
-
-def test_stream_matches_grouped_path_bytes(spark, tmp_path):
-    df = synth_corpus(spark, N_ROWS, seed=7, partitions=3)
-    df.cache().count()
-    outs = {}
-    for name, stream in (("stream", True), ("grouped", False)):
-        out = str(tmp_path / name)
-        # shuffle_payload="raw": this test pins the raw-row stream vs
-        # grouped (applyInArrow) equivalence; the packed default would
-        # force both legs through the stream kernel
-        job = encode(spark, df, out,
-                     EncodeOptions(target_rows=1_500, arrow_stream=stream,
-                                   shuffle_payload="raw"))
-        assert job["n_rows"] == N_ROWS
-        outs[name] = _block_digests(out)
-    assert outs["stream"] == outs["grouped"]
-    df.unpersist()
 
 
 def _write_clustered_input(spark, df, path: str, row_group_size: int = 600):
@@ -187,12 +163,6 @@ def test_encode_clustered_deterministic_bytes(spark, tmp_path):
                                        shuffle_oversub=oversub))
         digests.append(_block_digests(out))
     assert digests[0] == digests[1]
-    # ...and independent of the rowgroup read strategy
-    for i, mode in enumerate(("pre_buffer", "plain")):
-        out = str(tmp_path / f"m{i}")
-        encode_clustered(spark, src, out,
-                         EncodeOptions(target_rows=1_200, read_mode=mode))
-        assert _block_digests(out) == digests[0], mode
 
 
 def test_encode_clustered_decode_columns(spark, tmp_path):

@@ -136,36 +136,9 @@ def test_determinism_across_parallelism(spark, corpus, tmp_path):
     assert digests[0] == digests[1]
 
 
-def _blocks_digests(out: str) -> dict:
-    import hashlib
-    per_part = {}
-    for f in sorted(glob.glob(f"{out}/data/*.parquet")):
-        t = pq.read_table(f)
-        h = hashlib.sha256()
-        for col in ("column", "codec", "meta"):
-            h.update("".join(t.column(col).to_pylist()).encode())
-        for d in t.column("data").to_pylist():
-            h.update(d)
-        per_part[os.path.basename(f)] = h.hexdigest()
-    return per_part
-
-
-def test_packed_shuffle_byte_identical_and_verified(spark, corpus,
-                                                    tmp_path):
-    """shuffle_payload="packed" (zstd-compressed Arrow-IPC sub-batch
-    blobs through the exchange) must produce byte-identical blocks to
-    the raw-row shuffle — the payload representation is an exchange
-    concern, never a format one — and round-trip sha256-clean.  Also
-    exercises NULLs in every column through the IPC pack/unpack."""
-    out_raw = str(tmp_path / "praw")
-    out_pk = str(tmp_path / "ppk")
-    encode(spark, corpus, out_raw, batch_size=2_000, target_rows=2_000,
-           shuffle_payload="raw")
-    encode(spark, corpus, out_pk, batch_size=2_000, target_rows=2_000,
-           shuffle_payload="packed")
-    assert _blocks_digests(out_raw) == _blocks_digests(out_pk)
-    assert verify(spark, corpus, out_pk)["ok"]
-    # nulls everywhere survive the packed path
+def test_packed_shuffle_nulls_roundtrip(spark, tmp_path):
+    """NULLs in every column, including a NULL repo (the plan join is
+    null-safe), survive the packed Arrow-IPC exchange sha256-clean."""
     rows = [("org/r", "a.py", "c" * 40, None, "x = 1"),
             (None, None, None, None, None),
             ("org/r", "b.py", "d" * 40, "py", None)]
@@ -173,7 +146,7 @@ def test_packed_shuffle_byte_identical_and_verified(spark, corpus,
            "content string")
     nf = spark.createDataFrame(rows, ddl)
     out_n = str(tmp_path / "pnull")
-    encode(spark, nf, out_n, target_rows=10, shuffle_payload="packed")
+    encode(spark, nf, out_n, target_rows=10)
     assert verify(spark, nf, out_n)["ok"]
 
 
@@ -244,20 +217,34 @@ def test_partition_plan_arrow_path_identical_and_fast():
 def test_nullable_false_rejects_nulls(spark, tmp_path):
     """EncodeOptions(nullable=False) = strict schema (the reference's
     --info-optional off state, cli.rs:69-71): NULLs raise SchemaError
-    instead of encoding a validity bitmap."""
-    rows = [("org/r", "a.py", "c" * 40, None, "x = 1"),
-            ("org/r", "b.py", "d" * 40, "py", "y = 2")]
+    instead of encoding a validity bitmap.  The failing unit is the
+    first of its shuffle partition with more units unread behind it;
+    the next encode on the same session (so the same reused Python
+    workers) must read no stale batches and verify."""
+    rows = [(f"org/r{j // 5:02d}", f"f{j}.py", f"{j:040x}",
+             None if j == 0 else "py", f"x{j} = {j}") for j in range(200)]
     ddl = ("repo string, path string, commit string, lang string, "
            "content string")
     df = spark.createDataFrame(rows, ddl)
-    with pytest.raises(Exception, match="nullable=False"):
-        encode(spark, df, str(tmp_path / "strict"),
-               EncodeOptions(target_rows=10, nullable=False))
-    # clean corpus passes under strict mode
-    clean = df.filter(df.lang.isNotNull())
-    job = encode(spark, clean, str(tmp_path / "strict_ok"),
-                 EncodeOptions(target_rows=10, nullable=False))
-    assert job["n_rows"] == 1
+    # 40 one-repo units in 4 shuffle partitions, the NULL in unit 0; two
+    # blob rows per Arrow batch leave the rest of its partition unread
+    opts = dict(target_rows=5, shuffle_oversub=1, nullable=False)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        with pytest.raises(Exception, match=r"SchemaError: nullable=False "
+                                            r"but partition 0 has NULLs"):
+            encode(spark, df, str(tmp_path / "strict"),
+                   EncodeOptions(**opts))
+        # clean corpus passes under strict mode
+        clean = df.filter(df.lang.isNotNull())
+        out = str(tmp_path / "strict_ok")
+        job = encode(spark, clean, out, EncodeOptions(**opts))
+    finally:
+        spark.conf.set(key, prev)
+    assert job["n_rows"] == 199 and job["n_partitions"] == 40
+    assert verify(spark, clean, out)["ok"]
 
 
 def test_decode_with_derived_columns(spark, corpus, encoded):
@@ -445,27 +432,6 @@ def test_compaction_crash_safety(spark, tmp_path):
     for s in tbl.snapshots(out):
         n = decode(spark, out, snapshot_id=s["snapshot_id"]).count()
         assert n == 100 * min(s["snapshot_id"] + 1, 3), s
-
-
-def test_presort_digest_stable_with_nulls(spark, tmp_path):
-    """Null sort-column values: the shuffle presort (asc_nulls_last) and
-    the in-UDF pyarrow sort (nulls at end) must place them identically,
-    so manifests carry the same content digest either way."""
-    rows = [("org/r", f"f{j}.py", f"{j:040x}", "py",
-             None if j % 7 == 0 else f"v{j} = {j}") for j in range(200)]
-    ddl = ("repo string, path string, commit string, lang string, "
-           "content string")
-    df = spark.createDataFrame(rows, ddl)
-    digests = {}
-    for presort in (True, False):
-        out = str(tmp_path / f"blocks_{presort}")
-        encode(spark, df, out,
-               EncodeOptions(target_rows=1_000, presort_in_shuffle=presort,
-                             sort_columns=("repo", "path", "content")))
-        digests[presort] = {p: m["content_sha256"]
-                            for p, m in tbl.committed_parts(out).items()}
-    assert digests[True] == digests[False]
-    assert all(d for d in digests[True].values())
 
 
 def test_encode_decode_mixed_types(spark, tmp_path):

@@ -110,10 +110,11 @@ def test_exact_dedup_single_shuffle(spark):
     assert "Join" not in s
 
 
-def test_encode_shuffle_has_single_combined_sort(spark, corpus_path):
-    """The deterministic (repo,path,commit,content) sort must ride the
-    shuffle's mandatory part_id sort — exactly one Sort node, one data
-    exchange, no second sort above or below applyInArrow."""
+def test_encode_shuffle_has_single_sort(spark, corpus_path):
+    """encode's exchange shape: map-side mapInArrow packer →
+    repartition(part_id) → sortWithinPartitions(part_id) → reduce-side
+    mapInArrow plans exactly one Sort node and one data exchange — no
+    second sort or exchange around either Python stage."""
     from vcf2parquet_spark.encode import plan_partitions
     import pyarrow as pa
 
@@ -133,12 +134,13 @@ def test_encode_shuffle_has_single_combined_sort(spark, corpus_path):
                        .otherwise(F.lit(0))).cast("int"))
           .drop("base_part_id", "fanout"))
 
-    def g(key, t):
-        return t
+    def ident(batches):
+        yield from batches
 
-    q = (wp.repartition("part_id")
-         .sortWithinPartitions("part_id", "repo", "path", "commit", "content")
-         .groupBy("part_id").applyInArrow(g, schema=wp.schema))
+    q = (wp.mapInArrow(ident, schema=wp.schema)
+         .repartition(8, "part_id")
+         .sortWithinPartitions("part_id")
+         .mapInArrow(ident, schema=wp.schema))
     s = _plan(q, "simple")
     assert s.count("+- Sort") == 1, s
     assert s.count("Exchange hashpartitioning") == 1, s

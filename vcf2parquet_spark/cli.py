@@ -86,19 +86,6 @@ def main(argv: list[str] | None = None) -> int:
                             "faster AND tighter on long source text) or "
                             "fsst+residual; FSST keeps short columns "
                             "either way")
-        p.add_argument("--shuffle-payload", choices=["raw", "packed"],
-                       default="packed",
-                       help="general-path exchange payload: zstd-1-"
-                            "compressed Arrow-IPC sub-batch blobs "
-                            "(default; ~9x fewer bytes through the row-"
-                            "serialize/exchange/reduce-IPC path on "
-                            "source text, block bytes identical) or raw "
-                            "rows")
-        p.add_argument("--read-mode", choices=["mmap", "pre_buffer", "plain"],
-                       default="mmap",
-                       help="clustered-path rowgroup read strategy: mmap "
-                            "(page-cache, local/NVMe), pre_buffer "
-                            "(coalesced ranges, object stores), plain")
         p.add_argument("--no-resume", action="store_true")
         p.add_argument("--parquet-version", choices=["1.0", "2.4", "2.6"],
                        default="2.6",
@@ -179,14 +166,13 @@ def main(argv: list[str] | None = None) -> int:
                           codec_overrides=_parse_overrides(args.codec),
                           residual=args.residual,
                           long_strings=args.long_strings,
-                          shuffle_payload=args.shuffle_payload,
                           resume=not args.no_resume,
                           parquet_version=args.parquet_version)
             if getattr(args, "clustered", False):
                 if args.format != "parquet":
                     raise SystemExit("--clustered requires -f parquet")
                 job = encode_clustered(spark, args.input, args.output,
-                                       read_mode=args.read_mode, **common)
+                                       **common)
             else:
                 df = read_corpus(spark, args.input, fmt=args.format)
                 job = encode(spark, df, args.output, **common)

@@ -14,10 +14,13 @@ Spark-first dataflow (SURVEY.md §3.4), designed for 1000-executor /
 2. **Checkpoint filter**: committed partition ids (from the manifest
    dir) are anti-filtered out — exact resume; re-running after a crash
    encodes only missing partitions.
-3. **One shuffle**: ``repartition('part_id')`` co-locates each work
-   unit; ``applyInArrow`` then encodes each unit entirely in Arrow
-   (zero pandas/Python-object materialization — the ``input_hint``'s
-   "vectorized Arrow UDFs, no per-row Python").
+3. **One shuffle**: a map-side ``mapInArrow`` packs each (input batch ×
+   part_id) group into one zstd-compressed Arrow-IPC blob;
+   ``repartition('part_id')`` + ``sortWithinPartitions('part_id')``
+   make each work unit contiguous in one shuffle partition; a reduce-side
+   ``mapInArrow`` cuts the stream at part_id boundaries and encodes each
+   unit entirely in Arrow (zero pandas/Python-object materialization —
+   the ``input_hint``'s "vectorized Arrow UDFs, no per-row Python").
 4. **Inside the UDF** (executor, per partition): sort by (repo, path,
    commit, content) so block bytes are independent of shuffle
    nondeterminism; profile columns; auto-select codecs; derive integer
@@ -40,6 +43,8 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -108,21 +113,7 @@ class EncodeOptions:
     resume: bool = True
     derived_columns: bool = True
     sort_columns: tuple = ("repo", "path", "commit", "content")
-    # fold the deterministic sort into the shuffle's own sort: Spark must
-    # sort by part_id before applyInArrow anyway, so sorting by
-    # (part_id, *sort_columns) there costs one JVM sort total and lets
-    # the UDF skip its pyarrow sort (a full table copy) entirely
-    presort_in_shuffle: bool = True
     shuffle_oversub: int = 16  # shuffle partitions per core (see encode())
-    arrow_stream: bool = True  # stream shuffle partitions through
-                              # mapInArrow with an in-worker prefetch
-                              # thread, so the JVM feed of unit k+1
-                              # overlaps the kernels on unit k (the
-                              # groupBy/applyInArrow path materializes a
-                              # whole group before the UDF runs, making
-                              # feed → encode → return serial per task —
-                              # measured ~30% of reduce-task wall at 8
-                              # cores).  False = legacy applyInArrow.
     snapshot: bool = True     # False: skip the snapshot commit (used by
                               # compaction, which commits its own swap)
     manifest_tags: dict = field(default_factory=dict)  # extra manifest
@@ -150,29 +141,6 @@ class EncodeOptions:
                               # MB/s/core vs 12.64 @ 8.7); FSST keeps the
                               # short-string columns either way.  "fsst"
                               # restores the round-1..3 routing.
-    shuffle_payload: str = "packed"  # DEFAULT: the exchange moves zstd-1-
-                              # compressed Arrow-IPC sub-batch blobs
-                              # instead of raw rows — map side packs each
-                              # (input batch × part_id) group into one
-                              # blob, reduce side reopens them zero-copy.
-                              # The UNCOMPRESSED volume through row
-                              # serialization, the reduce-side sort and
-                              # the JVM<->Python Arrow IPC drops ~8.7x
-                              # on source text (on-wire shuffle bytes
-                              # stay ~equal — Spark lz4s them anyway;
-                              # BENCH/SHUFFLE_BYTES.json); measured 2.3x
-                              # faster at 8 cores and 1.22x at 32
-                              # (min-of-3, alternating) with block bytes
-                              # identical (pinned by test) — and at
-                              # cluster scale the shuffle fabric carries
-                              # compressed bytes.  "raw" restores the
-                              # row exchange (and re-enables
-                              # presort_in_shuffle / applyInArrow).
-    read_mode: str = "mmap"   # clustered-path rowgroup reads: "mmap"
-                              # (page-cache-backed, no copy into a fresh
-                              # arena — best on local/NVMe), "pre_buffer"
-                              # (coalesced range reads — best on object
-                              # stores like S3), or "plain"
     block_bytes: int = 1 << 30  # byte cap per block for any one string/
                               # binary column: blocks are split early when
                               # 100k rows of large source files would sum
@@ -390,14 +358,12 @@ def _content_digest(t: pa.Table) -> str:
 
 def encode_partition(part_id: int, t: pa.Table, output: str,
                      opts: EncodeOptions, schema_columns: list[str],
-                     already_sorted: bool = False,
                      loader=None, extra_metrics: dict | None = None) -> dict:
     """Encode one work unit (runs on an executor). Returns summary dict.
 
-    ``already_sorted`` is set by :func:`encode` when the shuffle itself
-    ordered rows by ``sort_columns`` (UTF-8 byte order with nulls LAST —
-    matching pyarrow ``pc.sort_indices``' defaults exactly, so block
-    bytes and the content digest are identical whichever path sorted).
+    Rows are sorted by ``sort_columns`` here (UTF-8 byte order, nulls
+    last), so block bytes and the content digest do not depend on the
+    order in which the shuffle or the file read delivered them.
 
     ``loader``: optional zero-arg callable returning the table — used by
     the clustered path so the parquet rowgroup read is timed as part of
@@ -439,7 +405,7 @@ def encode_partition(part_id: int, t: pa.Table, output: str,
             t = t.set_column(i, c, col.cast(pa.large_string()))
     sort_keys = [(c, "ascending") for c in opts.sort_columns
                  if c in t.column_names]
-    if sort_keys and not already_sorted:
+    if sort_keys:
         ts = time.time()
         t = t.take(pc.sort_indices(t, sort_keys=sort_keys))
         stage["sort"] = time.time() - ts
@@ -696,41 +662,18 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
         with_part = anti_join_committed(spark, with_part, committed)
 
     # 4. shuffle once by part_id, encode each unit in Arrow on executors
-    out_cols = schema_columns
-    opts_b = opts
-
-    packed = opts.shuffle_payload == "packed"
-    # packed mode ships zstd-compressed sub-batch blobs through the
-    # exchange — rows are opaque there, so the deterministic sort moves
-    # into the kernel (already_sorted=False); block bytes stay identical
-    # because pc.sort_indices applies the exact same key order
-    presort = (not packed and opts.presort_in_shuffle
-               and all(c in with_part.columns for c in opts.sort_columns))
-
-    _sum_schema = SUMMARY_ARROW
-
-    def _encode_group(key: tuple, t: pa.Table) -> pa.Table:
-        import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts_b.arrow_cpu)
-        pid = int(key[0].as_py())
-        t = t.drop_columns(["part_id"])
-        summary = encode_partition(pid, t, output, opts_b, list(out_cols),
-                                   already_sorted=presort)
-        return pa.Table.from_pylist([summary], schema=_sum_schema)
 
     def _materialize(parts: list) -> pa.Table:
         """One work unit's collected shuffle slices → its row table.
 
-        raw mode: the slices ARE the rows.  packed mode: each slice row
-        is a zstd-compressed Arrow-IPC blob of a map-side sub-batch;
-        open each blob zero-copy (``as_buffer``) and concatenate.  The
-        concatenation stays CHUNKED (no combine_chunks): a work unit
-        whose string column sums past 2 GiB would overflow int32
-        offsets in a combine (the decode-side failure class fixed in
-        round 4); encode_partition handles chunked columns — its
-        kernels combine per 100k-row batch slice, which is bounded."""
-        if not packed:
-            return pa.Table.from_batches(parts).drop_columns(["part_id"])
+        Each slice row is a zstd-compressed Arrow-IPC blob of a map-side
+        sub-batch; open each blob zero-copy (``as_buffer``) and
+        concatenate.  The concatenation stays CHUNKED (no
+        combine_chunks): a work unit whose string column sums past 2 GiB
+        would overflow int32 offsets in a combine (the decode-side
+        failure class fixed in round 4); encode_partition handles
+        chunked columns — its kernels combine per 100k-row batch slice,
+        which is bounded."""
         tables = []
         for rb in parts:
             blob_col = rb.column("blob")
@@ -742,55 +685,13 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
     def _encode_stream(batches):
         """mapInArrow kernel: consume the shuffle partition's (part_id-
         sorted) batch stream, cut it at part_id boundaries, and encode
-        each work unit — with a bounded prefetch thread so the Arrow
-        IPC read of the NEXT unit overlaps the codec kernels of the
-        current one.  Group content and row order are identical to the
-        applyInArrow path (hash partition + in-partition sort), so the
-        encoded block bytes are byte-identical between the two paths."""
-        import queue
-        import threading
-
+        each work unit.  Reads stay on the task's own thread, so a
+        failing unit stops the stream before the next batch is pulled
+        and a reused Python worker never sees stale reads."""
         import numpy as np
 
         import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts_b.arrow_cpu)
-
-        DONE, ERR = object(), object()
-        q: queue.Queue = queue.Queue(maxsize=8)
-        # stop flag: if the consumer below raises mid-stream (e.g. a
-        # kernel error in encode_partition), the reader must NOT keep
-        # draining the socket-backed batch iterator — a reused Python
-        # worker's next task would race the stale reads.  The reader
-        # checks the flag around every (bounded-timeout) put; the
-        # consumer sets it and JOINS the reader in a finally block
-        # before propagating.  This MITIGATES (not eliminates) the
-        # stale-read race: a reader blocked inside next(batches) — a
-        # socket read — cannot observe the flag, so the join below can
-        # time out with the daemon thread still alive; that case is
-        # loudly reported (stderr) instead of silently proceeding.
-        stop = threading.Event()
-
-        def _put(item) -> bool:
-            while not stop.is_set():
-                try:
-                    q.put(item, timeout=0.1)
-                    return True
-                except queue.Full:
-                    continue
-            return False
-
-        def _reader():
-            try:
-                for b in batches:
-                    if not _put(b):
-                        return
-                _put(DONE)
-            except BaseException as e:   # propagate into the main thread
-                if _put(ERR):
-                    _put(e)
-
-        reader = threading.Thread(target=_reader, daemon=True)
-        reader.start()
+        _pin_arrow(opts.arrow_cpu)
 
         cur_pid: int | None = None
         parts: list[pa.RecordBatch] = []
@@ -803,62 +704,37 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
             t = _materialize(parts)
             ipc_s = time.time() - ti
             parts = []
-            summary = encode_partition(cur_pid, t, output, opts_b,
-                                       list(out_cols),
-                                       already_sorted=presort,
+            summary = encode_partition(cur_pid, t, output, opts,
+                                       list(schema_columns),
                                        extra_metrics={
                                            "ipc_seconds": round(ipc_s, 4)})
             cur_pid = None
             return pa.RecordBatch.from_pylist([summary],
-                                              schema=_sum_schema)
+                                              schema=SUMMARY_ARROW)
 
-        try:
-            while True:
-                b = q.get()
-                if b is DONE:
-                    break
-                if b is ERR:
-                    raise q.get()
-                pids = b.column("part_id").to_numpy(zero_copy_only=False)
-                cuts = (np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist()
-                bounds = [0, *cuts, len(pids)]
-                for i in range(len(bounds) - 1):
-                    lo, hi = bounds[i], bounds[i + 1]
-                    if hi == lo:
-                        continue
-                    pid = int(pids[lo])
-                    if cur_pid is not None and pid != cur_pid:
-                        out = _flush()
-                        if out is not None:
-                            yield out
-                    cur_pid = pid
-                    parts.append(b.slice(lo, hi - lo))
-            out = _flush()
-            if out is not None:
-                yield out
-        finally:
-            stop.set()
-            try:                      # unblock a put stuck on a full queue
-                while True:
-                    q.get_nowait()
-            except queue.Empty:
-                pass
-            reader.join(timeout=10.0)
-            if reader.is_alive():
-                # blocked in next(batches) (socket read) — it cannot see
-                # the stop flag there.  Don't raise (that would mask the
-                # propagating exception, if any); make the hazard loud so
-                # a stale-read symptom on a reused worker is attributable.
-                import sys as _sys
-                print(f"vcf2parquet_spark: WARNING: shuffle prefetch "
-                      f"reader still alive after 10s join (part "
-                      f"{cur_pid}); a reused python worker may race "
-                      f"stale reads", file=_sys.stderr, flush=True)
+        for b in batches:
+            pids = b.column("part_id").to_numpy(zero_copy_only=False)
+            cuts = (np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist()
+            bounds = [0, *cuts, len(pids)]
+            for i in range(len(bounds) - 1):
+                lo, hi = bounds[i], bounds[i + 1]
+                if hi == lo:
+                    continue
+                pid = int(pids[lo])
+                if cur_pid is not None and pid != cur_pid:
+                    out = _flush()
+                    if out is not None:
+                        yield out
+                cur_pid = pid
+                parts.append(b.slice(lo, hi - lo))
+        out = _flush()
+        if out is not None:
+            yield out
 
     # Explicit shuffle width: work units hashed into only ~#cores buckets
     # make the largest bucket the wall clock (and AQE would coalesce
-    # them further).  applyInArrow processes a whole shuffle partition's
-    # groups serially, so the wall tail is the fullest BUCKET, not the
+    # them further).  _encode_stream processes a shuffle partition's
+    # units serially, so the wall tail is the fullest BUCKET, not the
     # slowest unit; heavy oversubscription (default 16x cores, capped by
     # the unit count) pushes buckets toward one unit each and the tail
     # toward a single unit — this is what keeps the N->4N scaling
@@ -868,29 +744,27 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
                            * opts.shuffle_oversub))
 
     def _pack_stream(batches):
-        """Map-side packer (shuffle_payload="packed"): group each input
-        Arrow batch's rows by part_id and emit ONE row per (batch,
-        part_id) group — a zstd-1-compressed Arrow-IPC blob holding the
-        group's rows.  The serialize/sort/IPC path then moves the
-        compressed blob bytes instead of every row byte (~8.7x less
-        uncompressed volume on source text — BENCH/SHUFFLE_BYTES.json;
-        the on-wire shuffle size barely changes because Spark lz4s
-        shuffle blocks either way).  At cluster scale the win is the
-        per-node serialization + IPC memcpy budget, which Spark never
-        compresses.  Vectorized: one argsort + one IPC write per
-        group, no per-row Python.
+        """Map-side packer: group each input Arrow batch's rows by
+        part_id and emit ONE row per (batch, part_id) group — a
+        zstd-1-compressed Arrow-IPC blob holding the group's rows.  The
+        serialize/sort/IPC path then moves the compressed blob bytes
+        instead of every row byte (~8.7x less uncompressed volume on
+        source text — BENCH/SHUFFLE_BYTES.json; the on-wire shuffle
+        size barely changes because Spark lz4s shuffle blocks either
+        way).  At cluster scale the win is the per-node serialization +
+        IPC memcpy budget, which Spark never compresses.  Vectorized:
+        one argsort + one IPC write per group, no per-row Python.
 
         Map-side seconds (the loop body only — waiting on the upstream
         scan/join iterator is NOT pack work) are written to
         ``{output}/pack_metrics/pack_<taskPartitionId>.json`` so the
         scaling report can split the engine's compute budget into
         map-side pack vs reduce-side kernel segments."""
-        import os as _os
         import numpy as np
         from pyspark import TaskContext
 
         import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts_b.arrow_cpu)
+        _pin_arrow(opts.arrow_cpu)
         ipc_opts = pa.ipc.IpcWriteOptions(compression=pa.Codec("zstd", 1))
         pack_s = 0.0
         for b in batches:
@@ -925,53 +799,31 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
             else:
                 pack_s += time.time() - tb0
         tc = TaskContext.get()
-        mdir = _os.path.join(output, "pack_metrics")
-        _os.makedirs(mdir, exist_ok=True)
+        mdir = os.path.join(output, "pack_metrics")
+        os.makedirs(mdir, exist_ok=True)
         # keyed by the task's partition id, written via the table's
         # tmp+rename primitive: a retried/speculative attempt replaces
         # its predecessor atomically instead of double-counting — or
         # tearing the JSON under a concurrent zombie attempt, which
         # would crash the scaling report's collector
         tbl.atomic_write_bytes(
-            _os.path.join(mdir,
-                          f"pack_{tc.partitionId() if tc else 0}.json"),
+            os.path.join(mdir, f"pack_{tc.partitionId() if tc else 0}.json"),
             json.dumps({"pack_seconds": round(pack_s, 4)}).encode())
 
-    if packed:
-        # fresh per-job pack metrics: these side-files are run
-        # diagnostics, not table state — nothing else cleans them, and
-        # stale files from a previous run of this output would
-        # double-count in the scaling report's segment split
-        import os as _osd
-        import shutil as _shutil
-        _shutil.rmtree(_osd.path.join(output, "pack_metrics"),
-                       ignore_errors=True)
-    pre_shuffle = (with_part.mapInArrow(_pack_stream,
-                                        schema="part_id long, blob binary")
-                   if packed else with_part)
-    shuffled = pre_shuffle.repartition(n_shuffle, "part_id")
-    if presort:
-        # asc_nulls_last matches pyarrow pc.sort_indices' default null
-        # placement, so block bytes and content_sha256 are identical
-        # whichever path sorted the rows (Spark's ascending default is
-        # nulls-FIRST, which would break cross-path digest stability)
-        shuffled = shuffled.sortWithinPartitions(
-            F.col("part_id"),
-            *[F.col(c).asc_nulls_last() for c in opts.sort_columns])
-    elif opts.arrow_stream or packed:
-        # the streaming kernel cuts the batch stream at part_id
-        # boundaries, so units must at least be contiguous (the rows
-        # themselves are then sorted inside encode_partition)
-        shuffled = shuffled.sortWithinPartitions(F.col("part_id"))
-    if opts.arrow_stream or packed:   # packed always streams
-        summaries = (shuffled
-                     .mapInArrow(_encode_stream, schema=SUMMARY_SCHEMA)
-                     .collect())
-    else:
-        summaries = (shuffled
-                     .groupBy("part_id")
-                     .applyInArrow(_encode_group, schema=SUMMARY_SCHEMA)
-                     .collect())
+    # fresh per-job pack metrics: these side-files are run diagnostics,
+    # not table state — nothing else cleans them, and stale files from a
+    # previous run of this output would double-count in the scaling
+    # report's segment split
+    shutil.rmtree(os.path.join(output, "pack_metrics"), ignore_errors=True)
+    # the streaming kernel cuts the batch stream at part_id boundaries,
+    # so units must be contiguous; the rows themselves are sorted inside
+    # encode_partition (the blobs are opaque to the exchange)
+    summaries = (with_part
+                 .mapInArrow(_pack_stream, schema="part_id long, blob binary")
+                 .repartition(n_shuffle, "part_id")
+                 .sortWithinPartitions(F.col("part_id"))
+                 .mapInArrow(_encode_stream, schema=SUMMARY_SCHEMA)
+                 .collect())
 
     return _finalize_job(output, opts, schema_columns, n_parts, summaries)
 
@@ -1091,26 +943,17 @@ def encode_clustered(spark: SparkSession, input_dir: str, output: str,
     committed = set(tbl.committed_parts(output)) if opts.resume else set()
     todo = [u for u in units if u["part_id"] not in committed]
 
-    _sum_schema = SUMMARY_ARROW
-    opts_b = opts
-    out_cols = list(schema_columns)
-
     def _encode_unit(batches):
         import pyarrow.parquet as pq
 
         import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts_b.arrow_cpu)
+        _pin_arrow(opts.arrow_cpu)
 
         def _load(p, a, z):
-            if opts_b.read_mode == "mmap":
-                # page-cache-backed mapping: decompression reads the OS
-                # cache directly instead of first copying every byte
-                # into a fresh arena buffer
-                src = pa.memory_map(p)
-            else:
-                src = p
-            f = pq.ParquetFile(src,
-                               pre_buffer=(opts_b.read_mode == "pre_buffer"))
+            # page-cache-backed mapping: decompression reads the OS
+            # cache directly instead of first copying every byte into a
+            # fresh arena buffer
+            f = pq.ParquetFile(pa.memory_map(p))
             try:
                 return f.read_row_groups(list(range(a, z)))
             finally:
@@ -1123,10 +966,10 @@ def encode_clustered(spark: SparkSession, input_dir: str, output: str,
             his = b.column("rg_hi").to_pylist()
             for pid, path, lo, hi in zip(pids, paths, los, his):
                 summary = encode_partition(
-                    int(pid), None, output, opts_b, out_cols,
+                    int(pid), None, output, opts, list(schema_columns),
                     loader=lambda p=path, a=lo, z=hi: _load(p, a, z))
                 yield pa.RecordBatch.from_pylist([summary],
-                                                 schema=_sum_schema)
+                                                 schema=SUMMARY_ARROW)
 
     summaries: list = []
     if todo:

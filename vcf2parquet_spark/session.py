@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_heap() -> str:
+    """Default driver heap: 40% of the host's physical memory (MemTotal),
+    capped at 24g — leaves room for the Python workers, which hold the
+    Arrow buffers, on a small host."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(24 << 10, total_mb * 2 // 5)}m"
+
+
 def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -26,14 +34,10 @@ def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
     # hosts).  Must be set before any worker imports pyarrow; workers
     # inherit the driver env in local mode.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    mem = os.environ.get("SPARK_DRIVER_MEM")
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        # pin the heap: committed pages stay committed (no G1 uncommit →
-        # no re-faulting of heap regions between jobs)
-        .config("spark.driver.extraJavaOptions",
-                f"-Xms{mem} -XX:-ShrinkHeapInSteps")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -46,10 +50,15 @@ def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        .config("spark.driver.memory", mem)
+        .config("spark.driver.memory", mem or _host_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )
+    if mem:
+        # an explicit heap is pinned: committed pages stay committed (no
+        # G1 uncommit → no re-faulting of heap regions between jobs)
+        builder = builder.config("spark.driver.extraJavaOptions",
+                                 f"-Xms{mem} -XX:-ShrinkHeapInSteps")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
