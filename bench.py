@@ -383,9 +383,9 @@ def run_scaling(spark32, pairs: int = 7) -> dict:
       directly by each executor's Python worker.  No shuffle; content
       bytes never transit the JVM.
     * ``shuffle`` (the general path for arbitrary row layouts): one
-      explicit repartition by salted work unit.  Since round 4 the
-      exchange payload defaults to PACKED zstd-1 Arrow-IPC sub-batch
-      blobs, so the row-serialize/sort/reduce-IPC path carries
+      exchange of salted work units onto driver-planned tasks.  Since
+      round 4 the exchange payload defaults to PACKED zstd-1 Arrow-IPC
+      sub-batch blobs, so the row-serialize/sort/reduce-IPC path carries
       compressed bytes (~8.7x less uncompressed volume than raw rows
       on source text — BENCH/SHUFFLE_BYTES.json).
 
@@ -714,7 +714,7 @@ def _write_baseline_md(s: dict) -> None:
         "physical parquet rowgroup ranges read directly by each",
         "executor's Python worker; no shuffle, content bytes never",
         "transit the JVM).  The general shuffle path (arbitrary row",
-        "layouts, salted work units, one explicit repartition) is",
+        "layouts, salted work units, one exchange onto planned tasks) is",
         "measured alongside and disclosed below.",
         "",
         f"**Median wall-clock scaling efficiency = {s['efficiency']}** "
@@ -838,7 +838,7 @@ def _write_baseline_md(s: dict) -> None:
         "Clustered: unit plan (footer metadata) → checkpoint filter →",
         "rowgroup read in-worker → sort → profile → codec-select →",
         "encode kernels → atomic commit.  Shuffle: plan aggregate →",
-        "checkpoint filter → broadcast join → repartition by part_id →",
+        "checkpoint filter → broadcast join → repartitionById(task) →",
         "sort → same kernel stages.",
         "",
         "Regenerate: `python bench.py --scaling` (env: SPARK_GRAFT_SCALE_N,",

@@ -17,6 +17,7 @@ import glob
 import hashlib
 import json
 import os
+import shutil
 import sys
 
 import pyarrow.parquet as pq
@@ -150,19 +151,29 @@ def test_encode_clustered_roundtrip_and_resume(spark, tmp_path):
 
 
 def test_encode_clustered_deterministic_bytes(spark, tmp_path):
-    """Same input table ⇒ same block bytes, independent of session
-    parallelism (units are cut from the physical layout, not the DAG)."""
+    """Same input table ⇒ same block bytes whichever task a unit runs on,
+    next to whichever other units (units are cut from the physical
+    layout, not the DAG): a full encode is compared with copies whose
+    units were partly deleted and resumed, so the re-encoded units are
+    placed on other tasks."""
     df = synth_corpus(spark, N_ROWS, seed=13, partitions=2)
     src = str(tmp_path / "src")
     _write_clustered_input(spark, df, src)
-    digests = []
-    for i, oversub in enumerate((1, 16)):
-        out = str(tmp_path / f"b{i}")
-        encode_clustered(spark, src, out,
-                         EncodeOptions(target_rows=1_200,
-                                       shuffle_oversub=oversub))
-        digests.append(_block_digests(out))
-    assert digests[0] == digests[1]
+    opts = EncodeOptions(target_rows=1_200)
+    full = str(tmp_path / "full")
+    encode_clustered(spark, src, full, opts)
+    want = _block_digests(full)
+    pids = sorted(tbl.committed_parts(full))
+    assert len(pids) > spark.sparkContext.defaultParallelism
+    for i, redo in enumerate((pids[::2], pids[1:])):
+        out = str(tmp_path / f"resume{i}")
+        shutil.copytree(full, out)
+        for pid in redo:
+            os.remove(tbl.manifest_path(out, pid))
+            os.remove(tbl.data_path(out, pid))
+        job = encode_clustered(spark, src, out, opts)
+        assert sorted(job["encoded_this_run"]) == redo
+        assert _block_digests(out) == want
 
 
 def test_encode_clustered_decode_columns(spark, tmp_path):

@@ -206,7 +206,8 @@ def test_partition_plan_arrow_path_identical_and_fast():
     repo = pa.array([r for r, _ in counts], type=pa.string())
     cnt = pa.array([c for _, c in counts], type=pa.int64())
     t0 = time.time()
-    plan_tbl, n_arrow = plan_partitions_arrow(repo, cnt, 250_000, offset=3)
+    plan_tbl, n_arrow, _ = plan_partitions_arrow(repo, cnt, 250_000,
+                                                 offset=3)
     dt = time.time() - t0
     assert dt < 20.0, f"arrow planning took {dt:.1f}s"  # see bound note above
     plan_list, n_list = plan_partitions(counts, 250_000, offset=3)
@@ -218,7 +219,7 @@ def test_nullable_false_rejects_nulls(spark, tmp_path):
     """EncodeOptions(nullable=False) = strict schema (the reference's
     --info-optional off state, cli.rs:69-71): NULLs raise SchemaError
     instead of encoding a validity bitmap.  The failing unit is the
-    first of its shuffle partition with more units unread behind it;
+    first of its task with more units unread behind it;
     the next encode on the same session (so the same reused Python
     workers) must read no stale batches and verify."""
     rows = [(f"org/r{j // 5:02d}", f"f{j}.py", f"{j:040x}",
@@ -226,9 +227,10 @@ def test_nullable_false_rejects_nulls(spark, tmp_path):
     ddl = ("repo string, path string, commit string, lang string, "
            "content string")
     df = spark.createDataFrame(rows, ddl)
-    # 40 one-repo units in 4 shuffle partitions, the NULL in unit 0; two
-    # blob rows per Arrow batch leave the rest of its partition unread
-    opts = dict(target_rows=5, shuffle_oversub=1, nullable=False)
+    # 40 one-repo units of equal size placed on the session's 4 tasks
+    # (unit 0 first on task 0, then units 4, 8, ...), the NULL in unit
+    # 0; two blob rows per Arrow batch leave the rest of its task unread
+    opts = dict(target_rows=5, nullable=False)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     spark.conf.set(key, "2")

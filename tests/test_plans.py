@@ -110,40 +110,79 @@ def test_exact_dedup_single_shuffle(spark):
     assert "Join" not in s
 
 
-def test_encode_shuffle_has_single_sort(spark, corpus_path):
+def test_encode_shuffle_has_single_sort(spark, corpus_path, tmp_path):
     """encode's exchange shape: map-side mapInArrow packer →
-    repartition(part_id) → sortWithinPartitions(part_id) → reduce-side
-    mapInArrow plans exactly one Sort node and one data exchange — no
-    second sort or exchange around either Python stage."""
-    from vcf2parquet_spark.encode import plan_partitions
-    import pyarrow as pa
+    repartitionById(task) → sortWithinPartitions(part_id) → reduce-side
+    mapInArrow plans exactly one Sort node and one data exchange, which
+    places each blob on its planned task — no hash exchange, no second
+    sort or exchange around either Python stage."""
+    from vcf2parquet_spark.encode import EncodeOptions, _encode_job
 
-    df = spark.read.parquet(corpus_path)
-    counts = [(r["repo"], r["cnt"]) for r in
-              df.groupBy("repo").agg(F.count("*").alias("cnt")).collect()]
-    plan, _ = plan_partitions(counts, 500)
-    plan_df = spark.createDataFrame(
-        [(p["repo"], p["base_part_id"], p["fanout"]) for p in plan],
-        "repo string, base_part_id int, fanout int")
-    wp = (df.join(F.broadcast(plan_df), "repo")
-          .withColumn("part_id",
-                      (F.col("base_part_id")
-                       + F.when(F.col("fanout") > 1,
-                                F.pmod(F.xxhash64("path", "commit"),
-                                       F.col("fanout")))
-                       .otherwise(F.lit(0))).cast("int"))
-          .drop("base_part_id", "fanout"))
-
-    def ident(batches):
-        yield from batches
-
-    q = (wp.mapInArrow(ident, schema=wp.schema)
-         .repartition(8, "part_id")
-         .sortWithinPartitions("part_id")
-         .mapInArrow(ident, schema=wp.schema))
-    s = _plan(q, "simple")
+    job_df, _ = _encode_job(spark, spark.read.parquet(corpus_path),
+                            str(tmp_path / "blocks"),
+                            EncodeOptions(target_rows=500))
+    s = _plan(job_df, "simple")
     assert s.count("+- Sort") == 1, s
-    assert s.count("Exchange hashpartitioning") == 1, s
+    assert s.count("+- Exchange ") == 1, s      # the plan side broadcasts
+    assert "Exchange shufflepartitionidpassthrough" in s, s
+    assert "REPARTITION_BY_NUM" in s, s
+    assert "hashpartitioning" not in s, s
+
+
+def test_encode_clustered_plans_no_exchange(spark, corpus_path, tmp_path):
+    """encode_clustered is one stage: Range → MapInArrow, no exchange."""
+    from vcf2parquet_spark.encode import EncodeOptions, _clustered_job
+
+    job_df, _, _ = _clustered_job(spark, corpus_path,
+                                  str(tmp_path / "blocks"),
+                                  EncodeOptions(target_rows=500))
+    s = _plan(job_df, "simple")
+    assert "Exchange" not in s, s
+    lines = [ln for ln in s.splitlines() if ln.strip()]
+    assert "MapInArrow" in lines[1] and "Range" in lines[2], s
+
+
+def _group_stage_tasks(sc, group: str) -> list[list[int]]:
+    """numTasks of each stage (by stage id) of each job of ``group``."""
+    tr = sc.statusTracker()
+    return [[tr.getStageInfo(sid).numTasks
+             for sid in sorted(tr.getJobInfo(jid).stageIds)]
+            for jid in sorted(tr.getJobIdsForGroup(group))]
+
+
+def test_encode_runs_one_task_per_slot(spark, tmp_path):
+    """Both encode paths run min(units, defaultParallelism) Python
+    tasks: encode_clustered as a single stage, encode() in its reduce
+    stage (the last stage of its last job)."""
+    from vcf2parquet_spark.corpus import synth_corpus
+    from vcf2parquet_spark.encode import encode, encode_clustered
+
+    sc = spark.sparkContext
+    src = str(tmp_path / "src")
+    (synth_corpus(spark, 3_000, seed=5, partitions=3).write
+     .option("parquet.block.size", 64 * 1024).parquet(src))
+    slots = sc.defaultParallelism
+    try:
+        sc.setJobGroup("enc_clustered", "task-count test")
+        job = encode_clustered(spark, src, str(tmp_path / "c"),
+                               target_rows=300)
+        assert job["n_partitions"] > slots
+        assert _group_stage_tasks(sc, "enc_clustered") == [[slots]]
+
+        sc.setJobGroup("enc_shuffle", "task-count test")
+        job = encode(spark, spark.read.parquet(src), str(tmp_path / "s"),
+                     target_rows=300)
+        assert job["n_partitions"] > slots
+        assert _group_stage_tasks(sc, "enc_shuffle")[-1][-1] == slots
+
+        # fewer units than slots: one task per unit
+        sc.setJobGroup("enc_few", "task-count test")
+        job = encode_clustered(spark, src, str(tmp_path / "f"),
+                               target_rows=1_500)
+        assert 1 < job["n_partitions"] < slots
+        assert _group_stage_tasks(sc, "enc_few") == [[job["n_partitions"]]]
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_multimodal_ops_are_narrow_maps(spark):

@@ -14,10 +14,14 @@ Spark-first dataflow (SURVEY.md §3.4), designed for 1000-executor /
 2. **Checkpoint filter**: committed partition ids (from the manifest
    dir) are anti-filtered out — exact resume; re-running after a crash
    encodes only missing partitions.
-3. **One shuffle**: a map-side ``mapInArrow`` packs each (input batch ×
-   part_id) group into one zstd-compressed Arrow-IPC blob;
-   ``repartition('part_id')`` + ``sortWithinPartitions('part_id')``
-   make each work unit contiguous in one shuffle partition; a reduce-side
+3. **One shuffle onto planned tasks**: the driver places the units on
+   ``min(units, defaultParallelism)`` tasks, largest planned row count
+   first onto the least-loaded task (:func:`assign_tasks` — one Python
+   task per slot, because every Python task start is a fixed cost); a
+   map-side ``mapInArrow`` packs each (input batch × part_id) group into
+   one zstd-compressed Arrow-IPC blob tagged with its task;
+   ``repartitionById('task')`` + ``sortWithinPartitions('part_id')``
+   make each work unit contiguous in its planned task; a reduce-side
    ``mapInArrow`` cuts the stream at part_id boundaries and encodes each
    unit entirely in Arrow (zero pandas/Python-object materialization —
    the ``input_hint``'s "vectorized Arrow UDFs, no per-row Python").
@@ -42,7 +46,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import shutil
 import time
@@ -94,6 +97,10 @@ class EncodeOptions:
     (/root/reference/python/src/lib.rs:35-44): batch_size default
     100_000; ``codec_overrides`` generalizes its single ``compression``
     enum to per-column choices; ``nullable`` mirrors ``info_optional``.
+
+    No field sets the task count: both encode paths run
+    ``min(units, defaultParallelism)`` Python tasks with units placed by
+    :func:`assign_tasks`, so parallelism follows the session's cores.
     """
     batch_size: int = DEFAULT_BATCH
     target_rows: int = DEFAULT_TARGET_ROWS
@@ -113,7 +120,6 @@ class EncodeOptions:
     resume: bool = True
     derived_columns: bool = True
     sort_columns: tuple = ("repo", "path", "commit", "content")
-    shuffle_oversub: int = 16  # shuffle partitions per core (see encode())
     snapshot: bool = True     # False: skip the snapshot commit (used by
                               # compaction, which commits its own swap)
     manifest_tags: dict = field(default_factory=dict)  # extra manifest
@@ -165,11 +171,13 @@ def _pin_arrow(n: int) -> None:
 def _plan_core(cnt, target_rows: int, offset: int):
     """Vectorized unit assignment over count-DESC-sorted repo counts.
 
-    Returns (base_part_id int64[n], fanout int64[n], next free id).
-    Hot repos (count > target) are salted across ``fanout`` units; small
-    repos are packed into shared units by prefix-sum chunking — a unit
-    exceeds target by at most one small repo (< 2×target).  Pure numpy
-    (C-level prefix sums): planning stays sub-second at 10^7+ repos.
+    Returns (base_part_id int64[n], fanout int64[n], next free id,
+    planned rows per unit int64[next id - offset]).  Hot repos (count >
+    target) are salted across ``fanout`` units of ``ceil(count/fanout)``
+    planned rows each; small repos are packed into shared units by
+    prefix-sum chunking — a unit exceeds target by at most one small
+    repo (< 2×target).  Pure numpy (C-level prefix sums and a
+    ``bincount``): planning stays sub-second at 10^7+ repos.
     """
     import numpy as np
     n_in = len(cnt)
@@ -181,24 +189,61 @@ def _plan_core(cnt, target_rows: int, offset: int):
         ([0], np.cumsum(fanout_hot)[:-1])).astype(np.int64)
         if hot_n else np.zeros(0, np.int64))
     next_id = offset + (int(fanout_hot.sum()) if hot_n else 0)
+    hot_rows = np.repeat(-(-cnt[:hot_n] // fanout_hot), fanout_hot)
 
     # small repos: shared units — unit = (rows before this repo) // target
     small_cnt = cnt[hot_n:]
     starts = np.cumsum(small_cnt) - small_cnt
-    unit = next_id + starts // target_rows
+    shared = starts // target_rows
+    unit = next_id + shared
+    small_rows = np.bincount(shared, weights=small_cnt) if len(shared) \
+        else np.zeros(0)
 
     base = np.concatenate([hot_base, unit]).astype(np.int64)
     fan = np.concatenate([fanout_hot,
                           np.ones(n_in - hot_n, np.int64)]).astype(np.int64)
     if n_in - hot_n:
         next_id = int(unit[-1]) + 1
-    return base, fan, next_id
+    rows = np.concatenate([hot_rows, small_rows]).astype(np.int64)
+    return base, fan, next_id, rows
 
 
-def plan_partitions_arrow(repo, cnt, target_rows: int,
-                          offset: int = 0) -> tuple[pa.Table, int]:
+def assign_tasks(sizes, slots: int):
+    """Deterministic LPT placement of work units onto Python tasks.
+
+    ``sizes[i]`` is unit i's planned load (rows or bytes).  Returns
+    (task index per unit int32[len(sizes)], n_tasks) with ``n_tasks =
+    min(len(sizes), slots)``: units go largest first onto the
+    least-loaded task, ties broken by unit index, then by the task with
+    fewer units, then task index.  The spread between the fullest and the emptiest task is at most the
+    largest unit, and every task gets at least one unit.
+
+    One task per slot because each Python task start costs a fixed
+    ~0.25 s on a host like the benchmark's (BENCH/BASELINE.md, task-cost
+    probe) — a task per unit never amortizes it — and Spark's hash or
+    round-robin placement of a few units leaves slots idle while
+    stacking units on others.
+    """
+    import heapq
+
+    import numpy as np
+    sizes = np.asarray(sizes, np.int64)
+    n = len(sizes)
+    n_tasks = min(n, max(1, int(slots)))
+    task = np.zeros(n, np.int32)
+    heap = [(0, 0, t) for t in range(n_tasks)]   # (load, units, task)
+    for i in np.lexsort((np.arange(n), -sizes)).tolist():
+        load, units, t = heapq.heappop(heap)
+        task[i] = t
+        heapq.heappush(heap, (load + int(sizes[i]), units + 1, t))
+    return task, n_tasks
+
+
+def plan_partitions_arrow(repo, cnt, target_rows: int, offset: int = 0):
     """Deterministic work-unit plan, Arrow end-to-end: (repo, count)
-    columns in → plan pa.Table (repo, base_part_id, fanout) out, with
+    columns in → (plan pa.Table (repo, base_part_id, fanout), next free
+    part id, planned rows of each unit ``offset..next-1`` as int64 — the
+    loads :func:`assign_tasks` balances) out, with
     ZERO per-repo Python objects — at 10^7-10^8 repos the previous
     ``collect()`` materialized multi-GB of Row objects on the driver
     before numpy ever saw them.  The repo strings ride Arrow buffers
@@ -218,18 +263,19 @@ def plan_partitions_arrow(repo, cnt, target_rows: int,
         empty = pa.table({"repo": pa.array([], pa.string()),
                           "base_part_id": pa.array([], pa.int64()),
                           "fanout": pa.array([], pa.int32())})
-        return empty, offset
+        return empty, offset, np.zeros(0, np.int64)
     order = pc.sort_indices(
         t, sort_keys=[("cnt", "descending"), ("repo", "ascending")],
         null_placement="at_end")
     t = t.take(order)
     cnt_sorted = t.column("cnt").combine_chunks().to_numpy(
         zero_copy_only=False).astype(np.int64, copy=False)
-    base, fan, next_id = _plan_core(cnt_sorted, target_rows, offset)
+    base, fan, next_id, unit_rows = _plan_core(cnt_sorted, target_rows,
+                                               offset)
     plan = pa.table({"repo": t.column("repo"),
                      "base_part_id": pa.array(base),
                      "fanout": pa.array(fan.astype(np.int32))})
-    return plan, next_id
+    return plan, next_id, unit_rows
 
 
 def plan_partitions(counts: list[tuple[str, int]], target_rows: int,
@@ -244,7 +290,7 @@ def plan_partitions(counts: list[tuple[str, int]], target_rows: int,
     """
     repo = pa.array([r for r, _ in counts], type=pa.string())
     cnt = pa.array([c for _, c in counts], type=pa.int64())
-    plan, next_id = plan_partitions_arrow(repo, cnt, target_rows, offset)
+    plan, next_id, _ = plan_partitions_arrow(repo, cnt, target_rows, offset)
     # columnar-to-pylist (3 bulk C conversions), not Table.to_pylist
     # (per-row dict building is ~3x slower at 10^6 rows)
     d = plan.to_pydict()
@@ -626,6 +672,23 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
     """
     opts = opts or EncodeOptions(**kwargs)
     tbl.init_layout(output)
+    job_df, n_parts = _encode_job(spark, df, output, opts)
+    # fresh per-job pack metrics: these side-files are run diagnostics,
+    # not table state — nothing else cleans them, and stale files from a
+    # previous run of this output would double-count in the scaling
+    # report's segment split
+    shutil.rmtree(os.path.join(output, "pack_metrics"), ignore_errors=True)
+    summaries = job_df.collect() if job_df is not None else []
+    return _finalize_job(output, opts, df.columns, n_parts, summaries)
+
+
+def _encode_job(spark: SparkSession, df: DataFrame, output: str,
+                opts: EncodeOptions) -> tuple[DataFrame | None, int]:
+    """Plan :func:`encode`'s units and build (not run) its one-exchange
+    job: (summary-row DataFrame, or None when every unit is already
+    committed; next free part id)."""
+    import numpy as np
+
     schema_columns = df.columns
 
     # 1. partition plan from the tiny repo-count aggregate — collected
@@ -634,15 +697,27 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
     # planner and goes straight back via createDataFrame(pa.Table),
     # zero per-repo Python objects end-to-end
     agg = df.groupBy("repo").agg(F.count("*").alias("cnt")).toArrow()
-    plan_tbl, n_parts = plan_partitions_arrow(
+    plan_tbl, n_parts, unit_rows = plan_partitions_arrow(
         agg.column("repo"), agg.column("cnt"), opts.target_rows,
         offset=opts.part_id_offset)
     plan_df = spark.createDataFrame(plan_tbl)
 
     # 2. checkpoint: skip committed partitions (exact resume)
     committed = set(tbl.committed_parts(output)) if opts.resume else set()
+    off = opts.part_id_offset
+    todo = np.setdiff1d(np.arange(off, n_parts, dtype=np.int64),
+                        np.fromiter(committed, np.int64, len(committed)))
+    if not len(todo):
+        return None, n_parts
 
-    # 3. assign part ids: broadcast join + deterministic salt for hot
+    # 3. place units on tasks by planned rows: one Python task per slot
+    # (see assign_tasks); unit_task[pid - off] is the task of unit pid
+    task_of, n_tasks = assign_tasks(unit_rows[todo - off],
+                                    spark.sparkContext.defaultParallelism)
+    unit_task = np.full(n_parts - off, -1, np.int32)
+    unit_task[todo - off] = task_of
+
+    # 4. assign part ids: broadcast join + deterministic salt for hot
     # repos.  Null-SAFE on repo (still a BroadcastHashJoin — Spark
     # treats eqNullSafe as an equi-join key): a name-list join would
     # silently DROP every NULL-repo row from the encode.
@@ -661,7 +736,7 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
     if committed:
         with_part = anti_join_committed(spark, with_part, committed)
 
-    # 4. shuffle once by part_id, encode each unit in Arrow on executors
+    # 5. one exchange to the planned tasks, encode each unit in Arrow
 
     def _materialize(parts: list) -> pa.Table:
         """One work unit's collected shuffle slices → its row table.
@@ -683,11 +758,11 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
         return pa.concat_tables(tables).drop_columns(["part_id"])
 
     def _encode_stream(batches):
-        """mapInArrow kernel: consume the shuffle partition's (part_id-
-        sorted) batch stream, cut it at part_id boundaries, and encode
-        each work unit.  Reads stay on the task's own thread, so a
-        failing unit stops the stream before the next batch is pulled
-        and a reused Python worker never sees stale reads."""
+        """mapInArrow kernel: consume the task's (part_id-sorted) batch
+        stream, cut it at part_id boundaries, and encode each work
+        unit.  Reads stay on the task's own thread, so a failing unit
+        stops the stream before the next batch is pulled and a reused
+        Python worker never sees stale reads."""
         import numpy as np
 
         import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
@@ -731,22 +806,11 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
         if out is not None:
             yield out
 
-    # Explicit shuffle width: work units hashed into only ~#cores buckets
-    # make the largest bucket the wall clock (and AQE would coalesce
-    # them further).  _encode_stream processes a shuffle partition's
-    # units serially, so the wall tail is the fullest BUCKET, not the
-    # slowest unit; heavy oversubscription (default 16x cores, capped by
-    # the unit count) pushes buckets toward one unit each and the tail
-    # toward a single unit — this is what keeps the N->4N scaling
-    # linear.  Extra near-empty tasks cost ~ms each.
-    n_shuffle = max(1, min(n_parts - opts.part_id_offset,
-                           spark.sparkContext.defaultParallelism
-                           * opts.shuffle_oversub))
-
     def _pack_stream(batches):
         """Map-side packer: group each input Arrow batch's rows by
         part_id and emit ONE row per (batch, part_id) group — a
-        zstd-1-compressed Arrow-IPC blob holding the group's rows.  The
+        zstd-1-compressed Arrow-IPC blob holding the group's rows,
+        tagged with the unit's planned task.  The
         serialize/sort/IPC path then moves the compressed blob bytes
         instead of every row byte (~8.7x less uncompressed volume on
         source text — BENCH/SHUFFLE_BYTES.json; the on-wire shuffle
@@ -791,8 +855,10 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
                 # is of COMPRESSED bytes only
                 out_blobs.append(sink.getvalue().to_pybytes())
             if out_pids:
+                pid_arr = np.asarray(out_pids, np.int64)
                 out_b = pa.record_batch(
-                    {"part_id": pa.array(out_pids, pa.int64()),
+                    {"part_id": pa.array(pid_arr),
+                     "task": pa.array(unit_task[pid_arr - off]),
                      "blob": pa.array(out_blobs, pa.binary())})
                 pack_s += time.time() - tb0
                 yield out_b
@@ -810,22 +876,19 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
             os.path.join(mdir, f"pack_{tc.partitionId() if tc else 0}.json"),
             json.dumps({"pack_seconds": round(pack_s, 4)}).encode())
 
-    # fresh per-job pack metrics: these side-files are run diagnostics,
-    # not table state — nothing else cleans them, and stale files from a
-    # previous run of this output would double-count in the scaling
-    # report's segment split
-    shutil.rmtree(os.path.join(output, "pack_metrics"), ignore_errors=True)
-    # the streaming kernel cuts the batch stream at part_id boundaries,
-    # so units must be contiguous; the rows themselves are sorted inside
-    # encode_partition (the blobs are opaque to the exchange)
-    summaries = (with_part
-                 .mapInArrow(_pack_stream, schema="part_id long, blob binary")
-                 .repartition(n_shuffle, "part_id")
-                 .sortWithinPartitions(F.col("part_id"))
-                 .mapInArrow(_encode_stream, schema=SUMMARY_SCHEMA)
-                 .collect())
-
-    return _finalize_job(output, opts, schema_columns, n_parts, summaries)
+    # repartitionById places each blob on exactly its planned task (a
+    # hash or round-robin exchange would stack units on some tasks and
+    # leave others empty); the streaming kernel cuts the batch stream at
+    # part_id boundaries, so units must be contiguous inside a task —
+    # the rows themselves are sorted inside encode_partition (the blobs
+    # are opaque to the exchange)
+    job_df = (with_part
+              .mapInArrow(_pack_stream,
+                          schema="part_id long, task int, blob binary")
+              .repartitionById(n_tasks, "task")
+              .sortWithinPartitions(F.col("part_id"))
+              .mapInArrow(_encode_stream, schema=SUMMARY_SCHEMA))
+    return job_df, n_parts
 
 
 def _finalize_job(output: str, opts: EncodeOptions,
@@ -903,15 +966,18 @@ def plan_file_units(input_dir: str, target_rows: int,
         md = pq.ParquetFile(f).metadata
         if not schema_cols:
             schema_cols = list(md.schema.to_arrow_schema().names)
-        lo, acc = 0, 0
+        lo, acc, nbytes = 0, 0, 0
         for i in range(md.num_row_groups):
-            acc += md.row_group(i).num_rows
+            rg = md.row_group(i)
+            acc += rg.num_rows
+            nbytes += rg.total_byte_size
             if acc >= target_rows or i == md.num_row_groups - 1:
                 if acc > 0:
                     units.append({"part_id": pid, "path": f,
-                                  "rg_lo": lo, "rg_hi": i + 1})
+                                  "rg_lo": lo, "rg_hi": i + 1,
+                                  "bytes": nbytes})
                     pid += 1
-                lo, acc = i + 1, 0
+                lo, acc, nbytes = i + 1, 0, 0
     return units, pid, schema_cols
 
 
@@ -921,9 +987,10 @@ def encode_clustered(spark: SparkSession, input_dir: str, output: str,
     the Iceberg-partition path the north star describes: each work unit
     is a physical rowgroup range that an executor's Python worker reads
     DIRECTLY with pyarrow and encodes in place.  Content bytes never
-    enter the JVM, a shuffle, or Arrow IPC; the only distributed rows
-    are (part_id, path, rg_lo, rg_hi) — the mirror image of the decode
-    path, and the Spark analogue of the reference's file-in →
+    enter the JVM, a shuffle, or Arrow IPC; the job is one stage of
+    ``min(units, defaultParallelism)`` tasks whose unit lists (part_id,
+    path, rg_lo, rg_hi) ride the UDF closure — the mirror image of the
+    decode path, and the Spark analogue of the reference's file-in →
     encoded-file-out unit (/root/reference/src/lib.rs:34-118).
 
     Compared to :func:`encode` (the general path for arbitrary row
@@ -938,12 +1005,35 @@ def encode_clustered(spark: SparkSession, input_dir: str, output: str,
     """
     opts = opts or EncodeOptions(**kwargs)
     tbl.init_layout(output)
+    job_df, n_parts, schema_columns = _clustered_job(spark, input_dir,
+                                                     output, opts)
+    summaries = job_df.collect() if job_df is not None else []
+    return _finalize_job(output, opts, schema_columns, n_parts, summaries)
+
+
+def _clustered_job(spark: SparkSession, input_dir: str, output: str,
+                   opts: EncodeOptions
+                   ) -> tuple[DataFrame | None, int, list[str]]:
+    """Plan :func:`encode_clustered`'s units and build (not run) its
+    job: (summary-row DataFrame, or None when every unit is already
+    committed; next free part id; input column names).  Units are
+    placed on tasks by their rowgroups' uncompressed bytes
+    (:func:`assign_tasks`) and each task's list rides the closure, so
+    the job is one stage — ``range`` → ``mapInArrow`` — with no
+    exchange."""
     units, n_parts, schema_columns = plan_file_units(
         input_dir, opts.target_rows, opts.part_id_offset)
     committed = set(tbl.committed_parts(output)) if opts.resume else set()
     todo = [u for u in units if u["part_id"] not in committed]
+    if not todo:
+        return None, n_parts, schema_columns
+    task_of, n_tasks = assign_tasks([u["bytes"] for u in todo],
+                                    spark.sparkContext.defaultParallelism)
+    by_task: list[list[dict]] = [[] for _ in range(n_tasks)]
+    for u, t in zip(todo, task_of.tolist()):
+        by_task[t].append(u)
 
-    def _encode_unit(batches):
+    def _encode_task(batches):
         import pyarrow.parquet as pq
 
         import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
@@ -960,28 +1050,16 @@ def encode_clustered(spark: SparkSession, input_dir: str, output: str,
                 f.close()
 
         for b in batches:
-            pids = b.column("part_id").to_pylist()
-            paths = b.column("path").to_pylist()
-            los = b.column("rg_lo").to_pylist()
-            his = b.column("rg_hi").to_pylist()
-            for pid, path, lo, hi in zip(pids, paths, los, his):
-                summary = encode_partition(
-                    int(pid), None, output, opts, list(schema_columns),
-                    loader=lambda p=path, a=lo, z=hi: _load(p, a, z))
-                yield pa.RecordBatch.from_pylist([summary],
-                                                 schema=SUMMARY_ARROW)
+            for task in b.column("id").to_pylist():
+                for u in by_task[task]:
+                    summary = encode_partition(
+                        u["part_id"], None, output, opts,
+                        list(schema_columns),
+                        loader=lambda u=u: _load(u["path"], u["rg_lo"],
+                                                 u["rg_hi"]))
+                    yield pa.RecordBatch.from_pylist([summary],
+                                                     schema=SUMMARY_ARROW)
 
-    summaries: list = []
-    if todo:
-        fdf = spark.createDataFrame(
-            [(u["part_id"], u["path"], u["rg_lo"], u["rg_hi"])
-             for u in todo],
-            "part_id long, path string, rg_lo int, rg_hi int")
-        width = max(1, min(len(todo),
-                           spark.sparkContext.defaultParallelism
-                           * opts.shuffle_oversub))
-        summaries = (fdf.repartition(width)   # file-name rows only
-                     .mapInArrow(_encode_unit, SUMMARY_SCHEMA)
-                     .collect())
-    return _finalize_job(output, opts, list(schema_columns), n_parts,
-                         summaries)
+    job_df = (spark.range(n_tasks, numPartitions=n_tasks)
+              .mapInArrow(_encode_task, SUMMARY_SCHEMA))
+    return job_df, n_parts, schema_columns
