@@ -196,8 +196,7 @@ def _plan_core(cnt, target_rows: int, offset: int):
     starts = np.cumsum(small_cnt) - small_cnt
     shared = starts // target_rows
     unit = next_id + shared
-    small_rows = np.bincount(shared, weights=small_cnt) if len(shared) \
-        else np.zeros(0)
+    small_rows = np.bincount(shared, weights=small_cnt)
 
     base = np.concatenate([hot_base, unit]).astype(np.int64)
     fan = np.concatenate([fanout_hot,
