@@ -21,12 +21,13 @@ what vcf2parquet emits, /root/reference/src/cli.rs:134).
 
 ``python bench.py --scaling`` additionally runs the encode job at
 local[N] and local[4N] (N = $SPARK_GRAFT_SCALE_N, default 2) on the
-same input and writes BENCH/BASELINE.md with both throughputs and the
-scaling efficiency — the sandbox evidence for the north rule's
-two-cluster-size criterion.  N defaults to 2 (not CPUS/4) because the
-levels must sit in the host's linear region to measure the ENGINE's
-scaling rather than the host's: a pure-CPU spin microbenchmark (run and
-recorded alongside every scaling report) shows this sandbox host itself
+same input and rewrites its own marked section of BENCH/BASELINE.md
+with both throughputs and the scaling efficiency — the sandbox
+evidence for the north rule's two-cluster-size criterion.  N
+defaults to 2 (not CPUS/4) because the levels must sit in the host's
+linear region to measure the ENGINE's scaling rather than the host's:
+a pure-CPU spin microbenchmark (run and recorded alongside every
+scaling report) shows this sandbox host itself
 delivers only ~0.69 efficiency from 8→32 processes and its memcpy
 bandwidth *drops* past ~8 processes, so no job of any kind can scale
 0.8 from local[8] to local[32] here.  On a real N→4N-executor cluster
@@ -63,6 +64,10 @@ WORK_DIR = os.environ.get("SPARK_GRAFT_WORK", "/tmp/vp_bench")
 # silently miss SCALING.json and drop scaling_cached)
 _BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "BENCH")
+# BASELINE.md also holds hand-recorded A/B sections; ``--scaling``
+# replaces only the text between these markers
+SCALING_BEGIN = "<!-- bench.py --scaling: generated section begin -->"
+SCALING_END = "<!-- bench.py --scaling: generated section end -->"
 
 
 def bench_conf() -> dict:
@@ -146,8 +151,9 @@ def main() -> None:
     corpus_path = materialize_corpus(spark, BENCH_ROWS)
 
     if scaling_only:
-        # regenerate BENCH/BASELINE.md without re-timing the headline
-        # suite (the suite number comes from a plain `python bench.py`)
+        # regenerate the scaling section of BENCH/BASELINE.md without
+        # re-timing the headline suite (the suite number comes from a
+        # plain `python bench.py`)
         s = run_scaling(spark, pairs=SCALE_PAIRS)
         print(json.dumps({
             "metric": "N-vs-4N scaling efficiency (clustered path median)",
@@ -372,7 +378,8 @@ def bench_encode_clustered(spark, src: str, out: str,
 
 
 def run_scaling(spark32, pairs: int = 7) -> dict:
-    """Encode at local[N] and local[4N]; writes BENCH/BASELINE.md.
+    """Encode at local[N] and local[4N]; rewrites its section of
+    BENCH/BASELINE.md.
 
     Two engine paths are measured, each over the same SCALING_ROWS
     input, with EQUAL statistical weight (``pairs`` (N, 4N) pairs each
@@ -844,8 +851,27 @@ def _write_baseline_md(s: dict) -> None:
         "Regenerate: `python bench.py --scaling` (env: SPARK_GRAFT_SCALE_N,",
         "SPARK_GRAFT_SCALING_ROWS).",
     ]
-    with open(os.path.join(_BENCH_DIR, "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+    write_marked_section(os.path.join(_BENCH_DIR, "BASELINE.md"),
+                         "\n".join(lines))
+
+
+def write_marked_section(path: str, body: str) -> None:
+    """Put ``body`` between SCALING_BEGIN and SCALING_END in ``path``,
+    keeping every line outside the markers.  A file without the markers
+    gets the section prepended; a missing file is created."""
+    block = f"{SCALING_BEGIN}\n{body.rstrip()}\n{SCALING_END}"
+    try:
+        with open(path) as f:
+            old = f.read()
+    except FileNotFoundError:
+        old = ""
+    if SCALING_BEGIN in old and SCALING_END in old:
+        head, rest = old.split(SCALING_BEGIN, 1)
+        new = head + block + rest.split(SCALING_END, 1)[1]
+    else:
+        new = block + "\n" + ("\n" + old if old else "")
+    with open(path, "w") as f:
+        f.write(new)
 
 
 if __name__ == "__main__":

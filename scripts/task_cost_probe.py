@@ -8,14 +8,20 @@ Each figure is the median of ``--reps`` runs after one warm-up run:
 
 * ``python_tasks_s`` / ``jvm_tasks_s``: 40 trivial tasks through a Python
   RDD vs 40 JVM-only tasks (``range`` counted without leaving the JVM);
+* ``engine_tasks_s``: 40 trivial Python tasks whose function calls
+  ``vcf2parquet_spark._alloc.worker_setup()`` first, as every engine
+  entry point does.  The setup forgets the worker's cached zip
+  importers, and that outlives the task on a reused worker, so this leg
+  runs last;
 * ``worker_task_gap_s``: median start-to-start gap of consecutive
   Python tasks on one reused worker (40 one-element tasks);
 * ``skeleton_s``: the two clustered-encode plan skeletons around a
   no-op ``mapInArrow`` — ``createDataFrame(n rows).repartition(n)``
   against ``range(min(n, cores), numPartitions=...)`` — for n = 3..8.
 
-The difference between the first two, per task, is what the encode
-paths save by running one Python task per core instead of one per unit.
+The difference between the first two, per task, is the fixed cost of
+a plain Python task; ``engine_tasks_s`` against ``jvm_tasks_s`` is what
+is left of it for an engine task.
 """
 from __future__ import annotations
 
@@ -92,6 +98,15 @@ def main() -> int:
                 .mapInArrow(noop, "id long").collect(), args.reps),
         }
     out["skeleton_s"] = skel
+
+    def engine(it):
+        from vcf2parquet_spark._alloc import worker_setup
+        worker_setup()
+        return it
+
+    out["engine_tasks_s"] = _median_wall(
+        lambda: sc.parallelize(range(40), 40).mapPartitions(engine).count(),
+        args.reps)
     spark.stop()
     with open("/proc/meminfo") as f:
         mem_mb = int(f.readline().split()[1]) // 1024

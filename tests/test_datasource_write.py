@@ -11,13 +11,19 @@ leave the live set but remain for time travel).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from vcf2parquet_spark import table as tbl
 from vcf2parquet_spark.corpus import synth_corpus
-from vcf2parquet_spark.datasource import register_data_source
+from vcf2parquet_spark.datasource import (
+    BlocksArrowWriter,
+    BlocksDataSource,
+    register_data_source,
+)
 from vcf2parquet_spark.decode import decode, verify
 from vcf2parquet_spark.encode import encode
 
@@ -229,3 +235,43 @@ def test_empty_prune_schema_tracks_live_set(reg, tmp_path):
     # StorageError, not a KeyError
     with _pytest.raises(StorageError, match="unknown columns"):
         decode(spark, out, columns=["content"], filters=nothing)
+
+
+def _write_direct(out: str, col: str, rows: list, overwrite: bool) -> None:
+    """One vcfblocks write job driven in-process: a single task's
+    ``write`` then the driver's ``commit`` (no Spark session needed)."""
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    schema = StructType([StructField(col, StringType())])
+    w = BlocksArrowWriter(schema, {"path": out, "sort": "false"}, overwrite)
+    batches = [pa.record_batch({col: pa.array(rows, pa.string())})] \
+        if rows else []
+    w.commit([w.write(iter(batches))])
+
+
+def test_schema_after_empty_overwrite_is_newest(tmp_path):
+    # A, then a schema-changing overwrite to B, then an overwrite with no
+    # rows: the live set is empty, and schema() must fall back to the
+    # newest manifest (B), not the oldest (A)
+    out = str(tmp_path / "t")
+    _write_direct(out, "a", ["x", "y"], overwrite=False)
+    _write_direct(out, "b", ["z"], overwrite=True)
+    _write_direct(out, "b", [], overwrite=True)
+    assert tbl.snapshots(out)[-1]["part_ids"] == []
+    assert BlocksDataSource({"path": out}).schema() == "`b` string"
+
+
+def test_schema_fallback_orders_manifest_ids_numerically(tmp_path):
+    # no snapshot at all: the newest manifest by numeric id, which a
+    # name sort gets wrong past part-99999
+    out = str(tmp_path / "t")
+    _write_direct(out, "old", ["x"], overwrite=False)           # part 0
+    m = tbl.committed_parts(out)[0]
+    for pid, col in ((99999, "mid"), (100000, "new")):
+        tbl.commit_manifest(out, pid, {
+            **m, "part_id": pid, "schema_columns": [col],
+            "all_columns": [col], "profiles": {col: m["profiles"]["old"]}})
+    for sid, p in tbl.snapshot_files(out):
+        os.remove(p)
+    assert BlocksDataSource({"path": out}).schema() == "`new` string"

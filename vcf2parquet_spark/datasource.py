@@ -89,6 +89,7 @@ from pyspark.sql.datasource import (
 )
 
 from vcf2parquet_spark import table as tbl
+from vcf2parquet_spark._alloc import worker_setup
 from vcf2parquet_spark.decode import (
     _SPARK_TYPES,
     _part_may_match,
@@ -194,14 +195,17 @@ def _schema_manifest(options: dict) -> dict:
     if part_id is not None:
         with open(tbl.manifest_path(path, part_id)) as f:
             return json.load(f)
-    # no snapshot yet (or an empty live set): any committed manifest —
-    # a crashed/in-flight run's table is still schema-readable
+    # no snapshot yet (or an empty live set): the NEWEST committed
+    # manifest — a crashed/in-flight run's table is still
+    # schema-readable, and after a schema-changing overwrite followed by
+    # an empty one the latest schema wins.  Ids are parsed, not sorted
+    # as names: part-100000 < part-99999 as strings.
     mdir = os.path.join(path, tbl.MANIFEST_DIR)
-    names = sorted(
-        n for n in (os.listdir(mdir) if os.path.isdir(mdir) else [])
-        if n.startswith("part-") and n.endswith(".json"))
-    if names:
-        with open(os.path.join(mdir, names[0])) as f:
+    ids = [int(n[5:-5])
+           for n in (os.listdir(mdir) if os.path.isdir(mdir) else [])
+           if n.startswith("part-") and n.endswith(".json")]
+    if ids:
+        with open(tbl.manifest_path(path, max(ids))) as f:
             return json.load(f)
     raise StorageError(f"no committed partitions under {path}")
 
@@ -239,6 +243,7 @@ class BlocksReader(DataSourceReader):
         so the pushdown is partition-granular and always exact.  Eager
         (not a generator): the side effect on self must happen even if
         the caller never iterates the leftovers."""
+        worker_setup()
         for f in filters:
             op = _FILTER_OPS.get(type(f))
             if op is not None and len(f.attribute) == 1:
@@ -252,6 +257,7 @@ class BlocksReader(DataSourceReader):
         return list(filters)
 
     def partitions(self) -> Sequence[InputPartition]:
+        worker_setup()
         # the ONE O(partitions) manifest scan per query execution —
         # always fresh, so a held DataFrame re-executed after new
         # commits sees them (schema() reads a single manifest instead)
@@ -348,6 +354,7 @@ class BlocksStreamReader(DataSourceStreamReader):
                    ) -> Sequence[InputPartition]:
         from vcf2parquet_spark.errors import StorageError
 
+        worker_setup()
         lo, hi = int(start["snapshot_id"]), int(end["snapshot_id"])
         snaps = tbl.snapshots(self._path)
         if lo >= 0 and (not snaps or snaps[0]["snapshot_id"] > lo):
@@ -494,10 +501,10 @@ class BlocksArrowWriter(DataSourceArrowWriter):
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> PartCommit:
         import pyarrow as pa
 
-        import vcf2parquet_spark._alloc  # noqa: F401 (worker mallopt)
         from pyspark import TaskContext
-        from vcf2parquet_spark.encode import _pin_arrow, encode_partition
-        _pin_arrow(self._opts.arrow_cpu)
+        from vcf2parquet_spark.encode import encode_partition
+
+        worker_setup(self._opts.arrow_cpu)
 
         batches = [b for b in iterator if b.num_rows]
         if not batches:
@@ -512,6 +519,7 @@ class BlocksArrowWriter(DataSourceArrowWriter):
                           enc_bytes=s["enc_bytes"])
 
     def commit(self, messages: List[Optional[PartCommit]]) -> None:
+        worker_setup()
         new = sorted(m.part_id for m in messages
                      if m is not None and m.part_id is not None)
         snap = tbl.commit_snapshot(
@@ -536,6 +544,7 @@ class BlocksArrowWriter(DataSourceArrowWriter):
         })
 
     def abort(self, messages: List[Optional[PartCommit]]) -> None:
+        worker_setup()
         for m in messages or []:
             if m is not None and getattr(m, "part_id", None) is not None:
                 for p in (tbl.data_path(self._path, m.part_id),
@@ -654,10 +663,10 @@ class BlocksStreamWriter(DataSourceStreamArrowWriter):
 
         import pyarrow as pa
 
-        import vcf2parquet_spark._alloc  # noqa: F401 (worker mallopt)
         from pyspark import TaskContext
-        from vcf2parquet_spark.encode import _pin_arrow, encode_partition
-        _pin_arrow(self._opts.arrow_cpu)
+        from vcf2parquet_spark.encode import encode_partition
+
+        worker_setup(self._opts.arrow_cpu)
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else 0
@@ -786,6 +795,7 @@ class BlocksStreamWriter(DataSourceStreamArrowWriter):
 
         from vcf2parquet_spark.errors import StorageError
 
+        worker_setup()
         if (batchId + 1) * self._stride >= QUERY_STRIDE:
             raise StorageError(
                 f"vcfblocks stream: query at {self._ckpt!r} exhausted "
@@ -883,6 +893,7 @@ class BlocksStreamWriter(DataSourceStreamArrowWriter):
               batchId: int) -> None:
         import shutil
 
+        worker_setup()
         for m in messages or []:
             if m is not None and getattr(m, "staged_dir", None):
                 shutil.rmtree(m.staged_dir, ignore_errors=True)
@@ -901,6 +912,7 @@ class BlocksDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> str:
+        worker_setup()
         m = _schema_manifest(self.options)
         cols = _option_columns(self.options, list(m["schema_columns"]),
                                list(m["all_columns"]))
@@ -909,15 +921,19 @@ class BlocksDataSource(DataSource):
             for c in cols)
 
     def reader(self, schema) -> BlocksReader:
+        worker_setup()
         return BlocksReader(schema, self.options)
 
     def writer(self, schema, overwrite: bool) -> BlocksArrowWriter:
+        worker_setup()
         return BlocksArrowWriter(schema, self.options, overwrite)
 
     def streamWriter(self, schema, overwrite: bool) -> BlocksStreamWriter:
+        worker_setup()
         return BlocksStreamWriter(schema, self.options, overwrite)
 
     def streamReader(self, schema) -> BlocksStreamReader:
+        worker_setup()
         return BlocksStreamReader(schema, self.options)
 
 

@@ -29,6 +29,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from vcf2parquet_spark import table as tbl
+from vcf2parquet_spark._alloc import worker_setup
 from vcf2parquet_spark.kernels import decode_column
 
 _SPARK_TYPES = {
@@ -136,11 +137,7 @@ def read_blocks_file(path: str, cols: list[str]):
     hand each worker a file path; pyarrow opens it directly."""
     import pyarrow.parquet as pq
 
-    import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-    from vcf2parquet_spark.encode import _pin_arrow
-    _pin_arrow(2)   # see EncodeOptions.arrow_cpu: pyarrow defaults to
-    # cpu_count threads PER worker process — 32 tasks x 32 threads of
-    # parquet-decompress contention on a 32-core host
+    worker_setup(2)   # Arrow pin: see EncodeOptions.arrow_cpu
 
     t = pq.read_table(
         path, columns=["block_idx", "column", "meta", "data"],

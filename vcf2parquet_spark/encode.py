@@ -17,7 +17,7 @@ Spark-first dataflow (SURVEY.md §3.4), designed for 1000-executor /
 3. **One shuffle onto planned tasks**: the driver places the units on
    ``min(units, defaultParallelism)`` tasks, largest planned row count
    first onto the least-loaded task (:func:`assign_tasks` — one Python
-   task per slot, because every Python task start is a fixed cost); a
+   task per slot, so no slot idles while another stacks units); a
    map-side ``mapInArrow`` packs each (input batch × part_id) group into
    one zstd-compressed Arrow-IPC blob tagged with its task;
    ``repartitionById('task')`` + ``sortWithinPartitions('part_id')``
@@ -57,6 +57,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from vcf2parquet_spark import table as tbl
+from vcf2parquet_spark._alloc import worker_setup
 from vcf2parquet_spark.errors import SchemaError
 from vcf2parquet_spark.kernels import encode_column
 from vcf2parquet_spark.profile import profile_arrow
@@ -160,14 +161,6 @@ class EncodeOptions:
                               # no column crosses the cap (goldens pinned).
 
 
-def _pin_arrow(n: int) -> None:
-    """Worker-side: bound pyarrow's intra-process parallelism (see
-    EncodeOptions.arrow_cpu).  Idempotent, cheap."""
-    if n and n > 0:
-        pa.set_cpu_count(n)
-        pa.set_io_thread_count(max(2, n))
-
-
 def _plan_core(cnt, target_rows: int, offset: int):
     """Vectorized unit assignment over count-DESC-sorted repo counts.
 
@@ -214,14 +207,15 @@ def assign_tasks(sizes, slots: int):
     (task index per unit int32[len(sizes)], n_tasks) with ``n_tasks =
     min(len(sizes), slots)``: units go largest first onto the
     least-loaded task, ties broken by unit index, then by the task with
-    fewer units, then task index.  The spread between the fullest and the emptiest task is at most the
-    largest unit, and every task gets at least one unit.
+    fewer units, then task index.  The spread between the fullest and
+    the emptiest task is at most the largest unit, and every task gets
+    at least one unit.
 
-    One task per slot because each Python task start costs a fixed
-    ~0.25 s on a host like the benchmark's (BENCH/BASELINE.md, task-cost
-    probe) — a task per unit never amortizes it — and Spark's hash or
-    round-robin placement of a few units leaves slots idle while
-    stacking units on others.
+    Placing units on the driver is what lets the clustered path run as
+    one ``range`` stage with no exchange, and lets the shuffle path send
+    each blob straight to its task; Spark's hash or round-robin
+    placement of a few units leaves slots idle while stacking units on
+    others.
     """
     import heapq
 
@@ -764,8 +758,7 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
         Python worker never sees stale reads."""
         import numpy as np
 
-        import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts.arrow_cpu)
+        worker_setup(opts.arrow_cpu)
 
         cur_pid: int | None = None
         parts: list[pa.RecordBatch] = []
@@ -826,8 +819,7 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
         import numpy as np
         from pyspark import TaskContext
 
-        import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts.arrow_cpu)
+        worker_setup(opts.arrow_cpu)
         ipc_opts = pa.ipc.IpcWriteOptions(compression=pa.Codec("zstd", 1))
         pack_s = 0.0
         for b in batches:
@@ -1035,8 +1027,7 @@ def _clustered_job(spark: SparkSession, input_dir: str, output: str,
     def _encode_task(batches):
         import pyarrow.parquet as pq
 
-        import vcf2parquet_spark._alloc  # noqa: F401 (executor mallopt)
-        _pin_arrow(opts.arrow_cpu)
+        worker_setup(opts.arrow_cpu)
 
         def _load(p, a, z):
             # page-cache-backed mapping: decompression reads the OS

@@ -28,10 +28,10 @@ def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 4)
-    # Arrow buffers in Python workers come from glibc (retained via the
-    # kernels' mallopt tuning) instead of jemalloc (which purges dirty
-    # pages back to the OS — expensive to re-fault on slow-page-fault
-    # hosts).  Must be set before any worker imports pyarrow; workers
+    # Arrow buffers in Python workers come from glibc (retained via
+    # _alloc.worker_setup's mallopt tuning) instead of jemalloc (which
+    # purges dirty pages back to the OS — expensive to re-fault on
+    # slow-page-fault hosts).  Must be set before any worker imports pyarrow; workers
     # inherit the driver env in local mode.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
     mem = os.environ.get("SPARK_DRIVER_MEM")
