@@ -30,6 +30,12 @@ from vcf2parquet_spark.encode import encode
 N_ROWS = 3_000
 
 
+def _n_files(parts) -> int:
+    """Blocks files planned over all input partitions (one partition
+    per task, each holding a list of files)."""
+    return sum(len(p.value) for p in parts)
+
+
 @pytest.fixture(scope="module")
 def blocks(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("ds") / "blocks")
@@ -91,14 +97,14 @@ def test_filter_pushdown_prunes_partitions(spark, blocks):
     leftover = list(reader.pushFilters([EqualTo(("repo",), a_repo)]))
     assert len(leftover) == 1          # partial pushdown: Spark re-checks
     pruned = reader.partitions()
-    assert 0 < len(pruned) < n_parts_total
+    assert 0 < _n_files(pruned) < n_parts_total
 
     # non-prunable filters are passed through untouched and harmless
     from pyspark.sql.datasource import StringContains
     r2 = ds.reader(full.schema)
     lo2 = list(r2.pushFilters([StringContains(("repo",), "x")]))
     assert len(lo2) == 1
-    assert len(r2.partitions()) == n_parts_total
+    assert _n_files(r2.partitions()) == n_parts_total
 
     # end-to-end: values under a pushed filter match the decode path
     got = full.filter(F.col("repo") == a_repo)
@@ -167,15 +173,15 @@ def test_pushdown_in_null_and_prefix(spark, tmp_path):
            part_id_offset=job_a["next_part_id"])
     register_data_source(spark)
     full = spark.read.format("vcfblocks").load(out)
-    n_total = len(BlocksDataSource({"path": out})
-                  .reader(full.schema).partitions())
+    n_total = _n_files(BlocksDataSource({"path": out})
+                       .reader(full.schema).partitions())
     assert n_total >= 2
 
     def n_parts(*filters):
         r = BlocksDataSource({"path": out}).reader(full.schema)
         leftover = list(r.pushFilters(list(filters)))
         assert len(leftover) == len(filters)   # all re-checked by Spark
-        return len(r.partitions())
+        return _n_files(r.partitions())
 
     half = n_total // 2
     # IN: no listed repo can live in the aaa/* partitions' bounds

@@ -9,7 +9,8 @@ import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from vcf2parquet_spark.encode import assign_tasks, plan_partitions_arrow
+from vcf2parquet_spark.encode import plan_partitions_arrow
+from vcf2parquet_spark.table import assign_tasks
 
 
 @given(st.lists(st.one_of(st.integers(0, 3), st.integers(0, 10**9)),

@@ -28,6 +28,9 @@ ENTRY_POINTS = {
         "BlocksStreamWriter.write", "BlocksStreamWriter.commit",
         "BlocksStreamWriter.abort",
     ],
+    "corpus.py": ["gen"],
+    "sources.py": ["op"],
+    "functions/multimodal.py": ["features_op", "resize_op", "frames_op"],
 }
 
 

@@ -33,6 +33,8 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vcf2parquet_spark._alloc import worker_setup
+
 GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
 LANGS = [
@@ -234,6 +236,7 @@ def synth_corpus(spark: SparkSession, n_rows: int, seed: int = 42,
     phr = pa.array(_PHRASES, type=pa.string())
 
     def gen(iterator):
+        worker_setup()
         for pdf in iterator:
             ids = pdf["id"].to_numpy().astype(np.uint64)
             yield _gen_batch(ids, seed, n_repos, cum, phr).to_pandas()

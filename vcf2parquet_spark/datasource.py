@@ -26,9 +26,10 @@ first-class format for EVERY consumer (``spark.read.format("vcfblocks")
 * ``include_derived`` option ("true"/"false"): expose the derived
   integer columns (size_bytes, n_lines) alongside the input schema.
 
-Parallelism = one input partition per committed blocks file (after
-pruning), the same distribution as the decode path's file-list
-``mapInArrow`` — zero shuffle, workers open their files directly with
+Parallelism = one input partition per Python task, each holding a
+list of committed blocks files placed on ``min(files, slots)`` tasks
+by the planner ``decode()`` uses (``decode.plan_read``) — zero
+shuffle, workers open their files directly with
 pyarrow.  The reference has no reader analogue (its pipeline is
 one-way, /root/reference/src/lib.rs:19-67); this is the Spark-native
 surface an analytics engine needs on top.
@@ -90,11 +91,8 @@ from pyspark.sql.datasource import (
 
 from vcf2parquet_spark import table as tbl
 from vcf2parquet_spark._alloc import worker_setup
-from vcf2parquet_spark.decode import (
-    _SPARK_TYPES,
-    _part_may_match,
-    read_blocks_file,
-)
+from vcf2parquet_spark.decode import _SPARK_TYPES, plan_read, read_blocks_file
+from vcf2parquet_spark.session import default_cores
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
@@ -126,54 +124,31 @@ _FILTER_OPS = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
                IsNull: "isnull", IsNotNull: "notnull"}
 
 
-def _plan(options: dict) -> tuple[dict, list[str], list[str]]:
-    """Resolve (manifests, base columns, all columns) for the table at
-    ``options['path']``, honoring snapshot_id."""
+def _table_path(options: dict) -> str:
     from vcf2parquet_spark.errors import StorageError
 
     path = options.get("path")
     if not path:
         raise StorageError("vcfblocks: .load(<table path>) is required")
-    snapshot_id = options.get("snapshot_id")
-    manifests = tbl.live_parts(path)
-    if snapshot_id is not None:
-        snaps = {s["snapshot_id"]: set(s["part_ids"])
-                 for s in tbl.snapshots(path)}
-        sid = int(snapshot_id)
-        if sid not in snaps:
-            raise StorageError(
-                f"unknown snapshot {sid} under {path}; have {sorted(snaps)}")
-        committed = tbl.committed_parts(path)
-        manifests = {p: m for p, m in committed.items() if p in snaps[sid]}
-    if not manifests:
-        raise StorageError(f"no committed partitions under {path}")
-    # base columns from the SELECTED manifests (not the table file): a
-    # snapshot_id read after a schema-changing overwrite must present
-    # the schema those parts were written with (see decode.decode)
-    first = next(iter(manifests.values()))
-    return (manifests, list(first["schema_columns"]),
-            list(first["all_columns"]))
+    return path
 
 
 def _schema_manifest(options: dict) -> dict:
     """ONE live manifest, for schema inference — O(snapshots) + a single
-    JSON read, NOT the O(partitions) scan ``_plan`` does.  schema() runs
-    once per ``spark.read`` and its result is baked into the plan;
-    caching _plan's output there instead would (a) ship O(partitions)
+    JSON read, NOT the O(partitions) scan read planning does.  schema()
+    runs once per ``spark.read`` and its result is baked into the plan;
+    caching the read plan there instead would (a) ship O(partitions)
     manifest JSON inside the pickled DataSource/reader to every
     executor and (b) pin a held DataFrame to schema-inference time —
     so partitions() always re-plans fresh and schema() reads one file.
     Append guards keep every live manifest's schema identical
     (``BlocksArrowWriter.__init__``); after a schema-changing
-    overwrite, the latest snapshot's parts carry the new schema — the
-    same choice ``_plan`` makes."""
+    overwrite, the latest snapshot's parts carry the new schema."""
     from vcf2parquet_spark.errors import StorageError
 
-    path = options.get("path")
-    if not path:
-        raise StorageError("vcfblocks: .load(<table path>) is required")
+    path = _table_path(options)
     # address ONE snapshot file directly — parsing the whole log would
-    # be O(snapshots) json loads, worse than the _plan scan this
+    # be O(snapshots) json loads, worse than the manifest scan this
     # function avoids on a streaming table (one snapshot per epoch)
     files = dict(tbl.snapshot_files(path))
     snap = None
@@ -193,8 +168,7 @@ def _schema_manifest(options: dict) -> dict:
             snap = json.load(f)
     part_id = snap["part_ids"][0] if snap and snap["part_ids"] else None
     if part_id is not None:
-        with open(tbl.manifest_path(path, part_id)) as f:
-            return json.load(f)
+        return tbl.read_manifest(path, part_id)
     # no snapshot yet (or an empty live set): the NEWEST committed
     # manifest — a crashed/in-flight run's table is still
     # schema-readable, and after a schema-changing overwrite followed by
@@ -205,8 +179,7 @@ def _schema_manifest(options: dict) -> dict:
            for n in (os.listdir(mdir) if os.path.isdir(mdir) else [])
            if n.startswith("part-") and n.endswith(".json")]
     if ids:
-        with open(tbl.manifest_path(path, max(ids))) as f:
-            return json.load(f)
+        return tbl.read_manifest(path, max(ids))
     raise StorageError(f"no committed partitions under {path}")
 
 
@@ -228,9 +201,11 @@ def _option_columns(options: dict, base: list[str],
 
 
 class BlocksReader(DataSourceReader):
-    """Plans one :class:`InputPartition` per committed blocks file
-    (post-pruning); each task decodes its file's blocks directly with
-    pyarrow — the same zero-shuffle shape as ``decode()``."""
+    """Plans one :class:`InputPartition` per Python task, holding that
+    task's list of committed blocks files (post-pruning, placed by
+    :func:`~vcf2parquet_spark.decode.plan_read` on ``min(files,
+    slots)`` tasks); each task decodes its files' blocks directly with
+    pyarrow — the same zero-shuffle plan as ``decode()``."""
 
     def __init__(self, schema, options: dict) -> None:
         self._options = dict(options)
@@ -257,25 +232,27 @@ class BlocksReader(DataSourceReader):
         return list(filters)
 
     def partitions(self) -> Sequence[InputPartition]:
+        from vcf2parquet_spark.errors import StorageError
+
         worker_setup()
         # the ONE O(partitions) manifest scan per query execution —
         # always fresh, so a held DataFrame re-executed after new
         # commits sees them (schema() reads a single manifest instead)
-        manifests, _, _ = _plan(self._options)
-        keep = [
-            pid for pid, m in sorted(manifests.items())
-            if all(_part_may_match(m, c, op, v)
-                   for c, op, v in self._pruning)]
-        path = self._options["path"]
-        return [InputPartition(tbl.data_path(path, pid)) for pid in keep]
+        path = _table_path(self._options)
+        sid = self._options.get("snapshot_id")
+        plan = plan_read(path, default_cores(),
+                         snapshot_id=None if sid is None else int(sid),
+                         filters=self._pruning)
+        if not plan.selected:
+            raise StorageError(f"no committed partitions under {path}")
+        return [InputPartition(paths) for paths in plan.tasks]
 
     def read(self, partition: InputPartition) -> Iterator["pa.RecordBatch"]:
         # partitions() may prune to ZERO files (e.g. a filter outside
         # every manifest's bounds); Spark then schedules one task with
         # partition=None — an empty scan, not an error
-        if partition is None:
-            return iter(())
-        return read_blocks_file(partition.value, self._cols)
+        for path in (() if partition is None else partition.value):
+            yield from read_blocks_file(path, self._cols)
 
 
 class BlocksStreamReader(DataSourceStreamReader):
@@ -287,9 +264,10 @@ class BlocksStreamReader(DataSourceStreamReader):
     model): an offset is ``{"snapshot_id": S}`` = "every row-carrying
     partition first referenced by snapshots <= S has been emitted".
     Each micro-batch plans the partitions FIRST introduced by snapshots
-    in ``(start, end]`` — one :class:`InputPartition` per blocks file,
-    decoded executor-side by the same shared read as the batch reader,
-    zero shuffle, no driver data path.
+    in ``(start, end]``, placed on ``min(files, slots)`` tasks by the
+    batch reader's planner — one :class:`InputPartition` per task,
+    holding a list of blocks files, decoded executor-side by the same
+    shared read as the batch reader, zero shuffle, no driver data path.
 
     Semantics (append-only stream, the Iceberg streaming-read model):
 
@@ -327,10 +305,7 @@ class BlocksStreamReader(DataSourceStreamReader):
     def __init__(self, schema, options: dict) -> None:
         from vcf2parquet_spark.errors import StorageError
 
-        path = options.get("path")
-        if not path:
-            raise StorageError("vcfblocks: .load(<table path>) is required")
-        self._path = path
+        self._path = _table_path(options)
         self._cols = [f.name for f in schema.fields]
         start = str(options.get("startingOffsets", "earliest")).lower()
         if start not in ("earliest", "latest"):
@@ -385,14 +360,15 @@ class BlocksStreamReader(DataSourceStreamReader):
                 seen.add(p)
                 if sid > lo and p not in skip:
                     new.append(p)
-        return [InputPartition(tbl.data_path(self._path, p))
-                for p in sorted(new)]
+        plan = plan_read(self._path, default_cores(), manifests={
+            p: tbl.read_manifest(self._path, p) for p in new})
+        return [InputPartition(paths) for paths in plan.tasks]
 
     def read(self, partition: InputPartition
              ) -> Iterator["pa.RecordBatch"]:
-        if partition is None:     # empty micro-batch (see BlocksReader)
-            return iter(())
-        return read_blocks_file(partition.value, self._cols)
+        # an empty micro-batch has partition=None (see BlocksReader)
+        for path in (() if partition is None else partition.value):
+            yield from read_blocks_file(path, self._cols)
 
     def commit(self, end: dict) -> None:
         # progress lives in the query checkpoint; nothing to clean up

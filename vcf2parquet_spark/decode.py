@@ -2,15 +2,17 @@
 
 Mirrors ``encode.py`` in reverse (SURVEY.md §3.4 ``decode.py`` stage):
 
-* plan: snapshot/time-travel resolution + manifest min/max pruning
-  produce the committed-file list (read-committed by construction —
-  uncommitted stray data files are never in the list);
-* execute: a narrow ``mapInArrow`` over the round-robin-distributed
-  file list; each task opens its files directly with pyarrow (column-
-  pruned read) and decodes block by block — ZERO shuffle of the encoded
-  bytes (the previous scan→repartition→applyInArrow shape moved the
-  whole table through the shuffle fabric once; at 100 TB that shuffle
-  IS the job);
+* plan (:func:`plan_read`, shared with the ``vcfblocks`` readers):
+  snapshot/time-travel resolution + manifest min/max pruning produce
+  the committed-file list (read-committed by construction — uncommitted
+  stray data files are never in the list), and the driver places the
+  files on ``min(files, slots)`` tasks by encoded bytes with the same
+  LPT placement the encode paths use;
+* execute: one stage, ``range`` → ``mapInArrow``, with each task's
+  file list in the closure; each task opens its files directly with
+  pyarrow (column-pruned read) and decodes block by block — no
+  exchange, no pickled-row stage, and ZERO shuffle of the encoded
+  bytes;
 * row-level predicates are applied on the decoded output (whole-stage
   codegen) after partition-level manifest pruning.
 
@@ -23,6 +25,7 @@ scanned exactly once and the full corpus never collects to the driver.
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass
 
 import pyarrow as pa
 
@@ -90,8 +93,9 @@ def _select_manifests(output: str,
     """The manifest selection every read path starts from: the LIVE set
     (latest snapshot ∪ adopted dangling parts), or — for time travel —
     the committed parts the requested snapshot references.  Raises on
-    an unknown snapshot.  One definition, used by ``decode``,
-    ``plan_decode_parts`` and ``sql`` so snapshot resolution cannot
+    an unknown snapshot.  One definition, used by :func:`plan_read`
+    (so by ``decode`` and the ``vcfblocks`` batch reader),
+    ``plan_decode_parts`` and ``sql``, so snapshot resolution cannot
     drift between them."""
     from vcf2parquet_spark.errors import StorageError
 
@@ -187,6 +191,44 @@ def plan_decode_parts(output: str, filters: list[tuple] | None = None,
                    for c, op, v in (filters or []))]
 
 
+@dataclass(frozen=True)
+class ReadPlan:
+    """What :func:`plan_read` hands a read path: the manifest selection
+    before pruning (it names the schema when every part is pruned), the
+    pruned-in part ids in ascending order, and one data-file list per
+    task."""
+    selected: dict[int, dict]
+    part_ids: list[int]
+    tasks: list[list[str]]
+
+
+def plan_read(output: str, slots: int, *, snapshot_id: int | None = None,
+              part_ids: list[int] | None = None,
+              filters: list[tuple] | None = None,
+              manifests: dict[int, dict] | None = None) -> ReadPlan:
+    """The one read planner: ``decode`` and both ``vcfblocks`` readers
+    turn a manifest selection, filters and a slot count into per-task
+    file lists here.  The selection is ``manifests`` when the caller
+    holds it (the stream reader's newly committed parts), else
+    :func:`_select_manifests` (live set or ``snapshot_id``), restricted
+    to ``part_ids`` when given; :func:`plan_decode_parts` prunes it and
+    ``table.assign_tasks`` places the surviving files on ``min(files,
+    slots)`` tasks, largest encoded size first, so one Python task per
+    slot reads a balanced share and none idles."""
+    if manifests is None:
+        manifests = _select_manifests(output, snapshot_id)
+    if part_ids is not None:
+        keep = set(part_ids)
+        manifests = {p: m for p, m in manifests.items() if p in keep}
+    pids = plan_decode_parts(output, filters, manifests=manifests)
+    task_of, n_tasks = tbl.assign_tasks(
+        [manifests[p]["enc_bytes"] for p in pids], slots)
+    tasks: list[list[str]] = [[] for _ in range(n_tasks)]
+    for p, t in zip(pids, task_of.tolist()):
+        tasks[t].append(tbl.data_path(output, p))
+    return ReadPlan(manifests, pids, tasks)
+
+
 def decode(spark: SparkSession, output: str,
            columns: list[str] | None = None,
            include_derived: bool = False,
@@ -209,63 +251,44 @@ def decode(spark: SparkSession, output: str,
 
     from vcf2parquet_spark.errors import StorageError
 
-    manifests = _select_manifests(output, snapshot_id)
-    if part_ids is not None:
-        manifests = {pid: m for pid, m in manifests.items()
-                     if pid in set(part_ids)}
-    if filters:
-        live = set(plan_decode_parts(output, filters,
-                                     manifests=manifests))
-        pruned = {pid: m for pid, m in manifests.items() if pid in live}
-        if manifests and not pruned:
-            # nothing can match: empty DataFrame with the SAME schema
-            # the non-empty path would return — taken from the newest
-            # manifest of the selection decode() is actually reading
-            # (live/snapshot/part_ids), NOT from committed_parts(),
-            # whose oldest entry may be a non-live pre-overwrite part
-            # with a different schema (code-review r5)
-            some = manifests[max(manifests)]
-            _, ddl0 = _columns_and_ddl(some, columns, include_derived,
-                                       output)
-            return spark.createDataFrame([], ddl0)
-        manifests = pruned
-    if not manifests:
+    plan = plan_read(output, spark.sparkContext.defaultParallelism,
+                     snapshot_id=snapshot_id, part_ids=part_ids,
+                     filters=filters)
+    if not plan.selected:
         raise StorageError(f"no committed partitions under {output}")
-    missing = [pid for pid in manifests
+    missing = [pid for pid in plan.part_ids
                if not os.path.exists(tbl.data_path(output, pid))]
     if missing:
         raise StorageError(
             f"manifest/data mismatch: committed partitions {missing} have no "
             f"data file under {output}/{tbl.DATA_DIR} — table is corrupt")
-    first = next(iter(manifests.values()))
     # base columns come from the SELECTED manifests' own recorded schema,
     # not the table file: after a schema-changing overwrite the table
     # meta describes the new live set, but a snapshot_id read scans the
-    # OLD parts — whose manifests carry the schema they were written with
-    cols, ddl = _columns_and_ddl(first, columns, include_derived, output)
+    # OLD parts — whose manifests carry the schema they were written
+    # with.  When filters prune every part, the newest manifest of the
+    # selection names the schema, never committed_parts()'s oldest
+    # entry, which may be a non-live pre-overwrite part (code-review r5)
+    schema_pid = plan.part_ids[0] if plan.part_ids else max(plan.selected)
+    cols, ddl = _columns_and_ddl(plan.selected[schema_pid], columns,
+                                 include_derived, output)
 
-    committed_ids = sorted(manifests)
-
-    # Shuffle-free decode: each committed partition is exactly one
-    # blocks file (the manifest is the file list, Iceberg-style), so
-    # instead of scanning + SHUFFLING the encoded bytes into
-    # (part_id, block_idx) groups — a full-table shuffle at 100 TB —
-    # we distribute the (tiny) pruned file list round-robin and let
-    # each task open its files directly with pyarrow: a narrow
-    # mapInArrow, zero data movement, parallelism = #partitions.
-    # Column pruning happens in the pyarrow read (only the requested
-    # columns' block rows are materialized).
-    paths = [(tbl.data_path(output, p),) for p in committed_ids]
-    n_slices = max(1, min(len(paths),
-                          spark.sparkContext.defaultParallelism * 4))
-    files = spark.createDataFrame(paths, "path string").repartition(n_slices)
+    # One stage, no exchange: the driver placed the pruned files on
+    # tasks (plan_read), task t reads tasks[t] from the closure and
+    # opens each file directly with pyarrow — column pruning happens in
+    # that read (only the requested columns' block rows materialize).
+    # An all-pruned plan has no task lists; range(0) still yields an
+    # empty DataFrame with the same schema.
+    tasks = plan.tasks
 
     def _decode_files(batches):
         for b in batches:
-            for path in b.column("path").to_pylist():
-                yield from read_blocks_file(path, cols)
+            for t in b.column("id").to_pylist():
+                for path in tasks[t]:
+                    yield from read_blocks_file(path, cols)
 
-    out = files.mapInArrow(_decode_files, schema=ddl)
+    out = (spark.range(len(tasks), numPartitions=max(1, len(tasks)))
+           .mapInArrow(_decode_files, schema=ddl))
     # manifest pruning is partition-granular; finish with the exact
     # row-level predicate (Catalyst expression, whole-stage codegen)
     for c, op, v in (filters or []):

@@ -16,7 +16,7 @@ Spark-first dataflow (SURVEY.md §3.4), designed for 1000-executor /
    encodes only missing partitions.
 3. **One shuffle onto planned tasks**: the driver places the units on
    ``min(units, defaultParallelism)`` tasks, largest planned row count
-   first onto the least-loaded task (:func:`assign_tasks` — one Python
+   first onto the least-loaded task (``table.assign_tasks`` — one Python
    task per slot, so no slot idles while another stacks units); a
    map-side ``mapInArrow`` packs each (input batch × part_id) group into
    one zstd-compressed Arrow-IPC blob tagged with its task;
@@ -101,7 +101,7 @@ class EncodeOptions:
 
     No field sets the task count: both encode paths run
     ``min(units, defaultParallelism)`` Python tasks with units placed by
-    :func:`assign_tasks`, so parallelism follows the session's cores.
+    ``table.assign_tasks``, so parallelism follows the session's cores.
     """
     batch_size: int = DEFAULT_BATCH
     target_rows: int = DEFAULT_TARGET_ROWS
@@ -200,43 +200,11 @@ def _plan_core(cnt, target_rows: int, offset: int):
     return base, fan, next_id, rows
 
 
-def assign_tasks(sizes, slots: int):
-    """Deterministic LPT placement of work units onto Python tasks.
-
-    ``sizes[i]`` is unit i's planned load (rows or bytes).  Returns
-    (task index per unit int32[len(sizes)], n_tasks) with ``n_tasks =
-    min(len(sizes), slots)``: units go largest first onto the
-    least-loaded task, ties broken by unit index, then by the task with
-    fewer units, then task index.  The spread between the fullest and
-    the emptiest task is at most the largest unit, and every task gets
-    at least one unit.
-
-    Placing units on the driver is what lets the clustered path run as
-    one ``range`` stage with no exchange, and lets the shuffle path send
-    each blob straight to its task; Spark's hash or round-robin
-    placement of a few units leaves slots idle while stacking units on
-    others.
-    """
-    import heapq
-
-    import numpy as np
-    sizes = np.asarray(sizes, np.int64)
-    n = len(sizes)
-    n_tasks = min(n, max(1, int(slots)))
-    task = np.zeros(n, np.int32)
-    heap = [(0, 0, t) for t in range(n_tasks)]   # (load, units, task)
-    for i in np.lexsort((np.arange(n), -sizes)).tolist():
-        load, units, t = heapq.heappop(heap)
-        task[i] = t
-        heapq.heappush(heap, (load + int(sizes[i]), units + 1, t))
-    return task, n_tasks
-
-
 def plan_partitions_arrow(repo, cnt, target_rows: int, offset: int = 0):
     """Deterministic work-unit plan, Arrow end-to-end: (repo, count)
     columns in → (plan pa.Table (repo, base_part_id, fanout), next free
     part id, planned rows of each unit ``offset..next-1`` as int64 — the
-    loads :func:`assign_tasks` balances) out, with
+    loads ``table.assign_tasks`` balances) out, with
     ZERO per-repo Python objects — at 10^7-10^8 repos the previous
     ``collect()`` materialized multi-GB of Row objects on the driver
     before numpy ever saw them.  The repo strings ride Arrow buffers
@@ -299,9 +267,12 @@ def anti_join_committed(spark: SparkSession, with_part: DataFrame,
     1e4-1e5 committed partitions, and inlining them as expression
     literals explodes the plan (and costs O(n) per row); the anti-join
     against a small broadcast side is O(1) per row and keeps the plan
-    constant-size (SURVEY.md §2.12 prescription)."""
-    committed_df = spark.createDataFrame(
-        [(int(p),) for p in sorted(committed)], "part_id long")
+    constant-size (SURVEY.md §2.12 prescription).  The broadcast side
+    is built from an Arrow table: a Python-list ``createDataFrame``
+    would run a pickled-row stage on a second Python daemon for every
+    resumed encode and streaming micro-batch."""
+    committed_df = spark.createDataFrame(pa.table(
+        {"part_id": pa.array(sorted(committed), pa.int64())}))
     return with_part.join(F.broadcast(committed_df), "part_id", "left_anti")
 
 
@@ -704,9 +675,10 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
         return None, n_parts
 
     # 3. place units on tasks by planned rows: one Python task per slot
-    # (see assign_tasks); unit_task[pid - off] is the task of unit pid
-    task_of, n_tasks = assign_tasks(unit_rows[todo - off],
-                                    spark.sparkContext.defaultParallelism)
+    # (see table.assign_tasks); unit_task[pid - off] is the task of
+    # unit pid
+    task_of, n_tasks = tbl.assign_tasks(
+        unit_rows[todo - off], spark.sparkContext.defaultParallelism)
     unit_task = np.full(n_parts - off, -1, np.int32)
     unit_task[todo - off] = task_of
 
@@ -1009,7 +981,7 @@ def _clustered_job(spark: SparkSession, input_dir: str, output: str,
     job: (summary-row DataFrame, or None when every unit is already
     committed; next free part id; input column names).  Units are
     placed on tasks by their rowgroups' uncompressed bytes
-    (:func:`assign_tasks`) and each task's list rides the closure, so
+    (``table.assign_tasks``) and each task's list rides the closure, so
     the job is one stage — ``range`` → ``mapInArrow`` — with no
     exchange."""
     units, n_parts, schema_columns = plan_file_units(
@@ -1018,8 +990,8 @@ def _clustered_job(spark: SparkSession, input_dir: str, output: str,
     todo = [u for u in units if u["part_id"] not in committed]
     if not todo:
         return None, n_parts, schema_columns
-    task_of, n_tasks = assign_tasks([u["bytes"] for u in todo],
-                                    spark.sparkContext.defaultParallelism)
+    task_of, n_tasks = tbl.assign_tasks(
+        [u["bytes"] for u in todo], spark.sparkContext.defaultParallelism)
     by_task: list[list[dict]] = [[] for _ in range(n_tasks)]
     for u, t in zip(todo, task_of.tolist()):
         by_task[t].append(u)

@@ -16,6 +16,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from vcf2parquet_spark._alloc import worker_setup
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),       # image|audio|video
@@ -77,7 +79,8 @@ def extract_features(df: DataFrame, dim: int = 16,
     """
     import hashlib
 
-    def op(batches):
+    def features_op(batches):
+        worker_setup()
         for pdf in batches:
             payloads = pdf["payload"]
             if deterministic_fake:
@@ -93,7 +96,7 @@ def extract_features(df: DataFrame, dim: int = 16,
             })
 
     cols = ["media_id", "kind", "payload"]
-    return df.select(*cols).mapInPandas(op, schema=FEATURE_SCHEMA)
+    return df.select(*cols).mapInPandas(features_op, schema=FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = ("media_id long, kind string, payload binary, "
@@ -135,7 +138,8 @@ def resize_media(df: DataFrame, width: int = 32, height: int = 32,
     """
     wh = width * height
 
-    def op(batches):
+    def resize_op(batches):
+        worker_setup()
         for pdf in batches:
             if deterministic_fake:
                 out = _fake_resize(pdf["payload"], wh)
@@ -150,7 +154,7 @@ def resize_media(df: DataFrame, width: int = 32, height: int = 32,
             })
 
     return (df.select("media_id", "kind", "payload")
-            .mapInPandas(op, schema=RESIZE_SCHEMA))
+            .mapInPandas(resize_op, schema=RESIZE_SCHEMA))
 
 
 def sample_frames(df: DataFrame, every_n: int = 4,
@@ -160,7 +164,8 @@ def sample_frames(df: DataFrame, every_n: int = 4,
     row count varies per input row, which ``mapInPandas`` supports
     natively; an ``explode`` can't carry the per-frame decode hook)."""
 
-    def op(batches):
+    def frames_op(batches):
+        worker_setup()
         for pdf in batches:
             payloads = pdf["payload"]
             n = len(payloads)
@@ -191,4 +196,4 @@ def sample_frames(df: DataFrame, every_n: int = 4,
             })
 
     return (df.select("media_id", "payload")
-            .mapInPandas(op, schema=FRAME_SCHEMA))
+            .mapInPandas(frames_op, schema=FRAME_SCHEMA))

@@ -21,11 +21,21 @@ def _host_heap() -> str:
     return f"{min(24 << 10, total_mb * 2 // 5)}m"
 
 
+def default_cores() -> int:
+    """The core count a session uses when none is given:
+    ``SPARK_GRAFT_CPUS``, else the host's CPU count.  Spark's DataSource
+    planner processes have no SparkContext to ask for
+    ``defaultParallelism``, so the ``vcfblocks`` readers take their slot
+    count from here too; the variable reaches them through the JVM's
+    environment."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+
+
 def get_spark(cores: int | None = None, app_name: str = "vcf2parquet_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 4)
     # Arrow buffers in Python workers come from glibc (retained via

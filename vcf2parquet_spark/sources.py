@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from vcf2parquet_spark._alloc import worker_setup
 from vcf2parquet_spark.errors import SchemaError
 
 CORPUS_COLUMNS = ["repo", "path", "commit", "lang", "content"]
@@ -89,6 +90,7 @@ def _read_xz(spark: SparkSession, path: str, fmt: str,
         .select("path", "content")
 
     def op(batches):
+        worker_setup()
         for pdf in batches:
             for raw in pdf["content"]:
                 yield from _iter_xz_chunks(raw, fmt, chunk_rows)

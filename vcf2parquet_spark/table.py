@@ -73,6 +73,39 @@ def manifest_path(output: str, part_id: int) -> str:
     return os.path.join(output, MANIFEST_DIR, part_name(part_id) + ".json")
 
 
+def assign_tasks(sizes, slots: int):
+    """Deterministic LPT placement of work units onto Python tasks.
+
+    ``sizes[i]`` is unit i's planned load (rows or bytes).  Returns
+    (task index per unit int32[len(sizes)], n_tasks) with ``n_tasks =
+    min(len(sizes), slots)``: units go largest first onto the
+    least-loaded task, ties broken by unit index, then by the task with
+    fewer units, then task index.  The spread between the fullest and
+    the emptiest task is at most the largest unit, and every task gets
+    at least one unit.
+
+    Placing units on the driver is what lets the clustered encode and
+    every read path (``decode.plan_read``) run as one ``range`` stage
+    or one input partition per task with no exchange, and lets the
+    shuffle encode send each blob straight to its task; Spark's hash or
+    round-robin placement of a few units leaves slots idle while
+    stacking units on others.
+    """
+    import heapq
+
+    import numpy as np
+    sizes = np.asarray(sizes, np.int64)
+    n = len(sizes)
+    n_tasks = min(n, max(1, int(slots)))
+    task = np.zeros(n, np.int32)
+    heap = [(0, 0, t) for t in range(n_tasks)]   # (load, units, task)
+    for i in np.lexsort((np.arange(n), -sizes)).tolist():
+        load, units, t = heapq.heappop(heap)
+        task[i] = t
+        heapq.heappush(heap, (load + int(sizes[i]), units + 1, t))
+    return task, n_tasks
+
+
 def init_layout(output: str) -> None:
     os.makedirs(os.path.join(output, MANIFEST_DIR), exist_ok=True)
     os.makedirs(os.path.join(output, DATA_DIR), exist_ok=True)
@@ -111,6 +144,11 @@ def commit_manifest(output: str, part_id: int, manifest: dict) -> None:
     atomic_write_bytes(
         manifest_path(output, part_id),
         json.dumps(manifest, sort_keys=True, indent=1).encode())
+
+
+def read_manifest(output: str, part_id: int) -> dict:
+    with open(manifest_path(output, part_id)) as f:
+        return json.load(f)
 
 
 def committed_parts(output: str) -> dict[int, dict]:
