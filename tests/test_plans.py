@@ -295,7 +295,9 @@ def test_decode_runs_one_task_per_slot(spark, read_table):
 
 def test_decode_all_pruned_keeps_schema(spark, read_table):
     """A filter that prunes every part reads zero files and still
-    returns the unpruned read's schema, for every column selection."""
+    returns the unpruned read's schema, for every column selection —
+    also one that leaves the filter's column out, which a filter that
+    prunes nothing then applies to the right rows."""
     from vcf2parquet_spark.decode import decode, plan_read
 
     out, _ = read_table
@@ -303,48 +305,57 @@ def test_decode_all_pruned_keeps_schema(spark, read_table):
     plan = plan_read(out, 4, filters=none)
     assert plan.selected and plan.part_ids == [] and plan.tasks == []
     for kw in ({}, {"include_derived": True},
-               {"columns": ["repo", "n_lines"]}):
+               {"columns": ["repo", "n_lines"]},
+               {"columns": ["lang", "n_lines"]}):
         empty = decode(spark, out, filters=none, **kw)
         assert empty.schema == decode(spark, out, **kw).schema, kw
         assert empty.count() == 0
+
+    rows = decode(spark, out, columns=["repo", "lang", "n_lines"]).toArrow()
+    repo = rows.column("repo")[0].as_py()
+    want = sorted((r["lang"], r["n_lines"]) for r in rows.to_pylist()
+                  if r["repo"] == repo)
+    got = decode(spark, out, columns=["lang", "n_lines"],
+                 filters=[("repo", "==", repo)])
+    assert got.columns == ["lang", "n_lines"]
+    assert sorted(tuple(r) for r in got.collect()) == want
     assert "Exchange" not in _plan(decode(spark, out, filters=none),
                                    "simple")
 
 
 def test_blocks_reader_plans_one_partition_per_slot(spark, read_table):
     """The batch vcfblocks read plans min(files, slots) input
-    partitions, each pruned-in file exactly once, and runs that many
-    tasks."""
+    partitions, each pruned-in file exactly once, for slot counts below
+    and above the file count, and runs that many tasks."""
     from pyspark.sql.datasource import EqualTo
 
     from vcf2parquet_spark import table as tbl
     from vcf2parquet_spark.datasource import (
-        BlocksDataSource, register_data_source)
+        BlocksReader, register_data_source)
     from vcf2parquet_spark.decode import decode, plan_decode_parts
-    from vcf2parquet_spark.session import default_cores
 
     out, job = read_table
     register_data_source(spark)
     full = spark.read.format("vcfblocks").load(out)
-    ds = BlocksDataSource({"path": out})
-    slots = default_cores()
-
-    parts = ds.reader(full.schema).partitions()
-    files = [f for p in parts for f in p.value]
-    assert len(parts) == min(job["n_partitions"], slots)
-    assert sorted(files) == sorted(tbl.data_path(out, p)
-                                   for p in tbl.live_parts(out))
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
 
     repo = decode(spark, out).select("repo").first()["repo"]
-    reader = ds.reader(full.schema)
-    reader.pushFilters([EqualTo(("repo",), repo)])
-    parts = reader.partitions()
     want = plan_decode_parts(out, [("repo", "==", repo)])
-    files = [f for p in parts for f in p.value]
-    assert len(parts) == min(len(want), slots)
-    assert sorted(files) == sorted(tbl.data_path(out, p) for p in want)
+    for n in (2, slots, job["n_partitions"] + 5):
+        parts = BlocksReader(full.schema, {"path": out}, n).partitions()
+        files = [f for p in parts for f in p.value]
+        assert len(parts) == min(job["n_partitions"], n)
+        assert sorted(files) == sorted(tbl.data_path(out, p)
+                                       for p in tbl.live_parts(out))
 
-    sc = spark.sparkContext
+        reader = BlocksReader(full.schema, {"path": out}, n)
+        reader.pushFilters([EqualTo(("repo",), repo)])
+        parts = reader.partitions()
+        files = [f for p in parts for f in p.value]
+        assert len(parts) == min(len(want), n)
+        assert sorted(files) == sorted(tbl.data_path(out, p) for p in want)
+
     try:
         sc.setJobGroup("ds_read", "task-count test")
         assert full.toArrow().num_rows == job["n_rows"]
@@ -460,3 +471,55 @@ def test_decode_and_resumed_encode_start_one_python_daemon(tmp_path):
     steps = json.loads(proc.stdout.strip().splitlines()[-1])
     for step, c in steps.items():
         assert c["jvms"] == 1 and c["daemons"] == 1, (step, steps)
+
+
+_SLOTS_JOB = r"""
+import json, sys
+from vcf2parquet_spark.corpus import synth_corpus_arrow
+from vcf2parquet_spark.datasource import register_data_source
+from vcf2parquet_spark.encode import encode
+from vcf2parquet_spark.session import get_spark
+
+out, cores = sys.argv[1], int(sys.argv[2])
+spark = get_spark(cores=cores)
+df = spark.createDataFrame(synth_corpus_arrow(2_000, seed=3))
+job = encode(spark, df, out, target_rows=200)
+register_data_source(spark)
+got = {"files": job["n_partitions"],
+       "slots": spark.sparkContext.defaultParallelism,
+       "batch": spark.read.format("vcfblocks").load(out)
+                .rdd.getNumPartitions()}
+batches = []
+q = (spark.readStream.format("vcfblocks").load(out).writeStream
+     .foreachBatch(lambda b, _: batches.append(b.rdd.getNumPartitions()))
+     .option("checkpointLocation", out + "-ckpt")
+     .trigger(availableNow=True).start())
+q.awaitTermination()
+got["stream"] = batches
+spark.stop()
+print(json.dumps(got))
+"""
+
+
+def test_blocks_readers_plan_for_the_session_slots(tmp_path):
+    """The vcfblocks batch and stream readers plan for the slots of the
+    session that registered them, not for the host's CPU count or
+    SPARK_GRAFT_CPUS: Spark plans Python data source reads in a
+    separate process with no SparkContext."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    cores = 3 if os.cpu_count() != 3 else 2
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_DRIVER_MEM="1g",
+               SPARK_GRAFT_CPUS=str(cores + 4))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SLOTS_JOB, str(tmp_path / "blocks"),
+         str(cores)],
+        capture_output=True, text=True, timeout=600, env=env, cwd=repo)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["slots"] == cores and got["files"] > cores + 4, got
+    assert got["batch"] == cores and got["stream"] == [cores], got

@@ -207,9 +207,10 @@ class BlocksReader(DataSourceReader):
     slots)`` tasks); each task decodes its files' blocks directly with
     pyarrow — the same zero-shuffle plan as ``decode()``."""
 
-    def __init__(self, schema, options: dict) -> None:
+    def __init__(self, schema, options: dict, slots: int) -> None:
         self._options = dict(options)
         self._cols = [f.name for f in schema.fields]
+        self._slots = slots
         self._pruning: list[tuple[str, str, object]] = []
 
     def pushFilters(self, filters: list[Filter]) -> list[Filter]:
@@ -240,7 +241,7 @@ class BlocksReader(DataSourceReader):
         # commits sees them (schema() reads a single manifest instead)
         path = _table_path(self._options)
         sid = self._options.get("snapshot_id")
-        plan = plan_read(path, default_cores(),
+        plan = plan_read(path, self._slots,
                          snapshot_id=None if sid is None else int(sid),
                          filters=self._pruning)
         if not plan.selected:
@@ -302,11 +303,12 @@ class BlocksStreamReader(DataSourceStreamReader):
     ``latest`` (only snapshots committed after the query starts).
     """
 
-    def __init__(self, schema, options: dict) -> None:
+    def __init__(self, schema, options: dict, slots: int) -> None:
         from vcf2parquet_spark.errors import StorageError
 
         self._path = _table_path(options)
         self._cols = [f.name for f in schema.fields]
+        self._slots = slots
         start = str(options.get("startingOffsets", "earliest")).lower()
         if start not in ("earliest", "latest"):
             raise StorageError(
@@ -360,7 +362,7 @@ class BlocksStreamReader(DataSourceStreamReader):
                 seen.add(p)
                 if sid > lo and p not in skip:
                     new.append(p)
-        plan = plan_read(self._path, default_cores(), manifests={
+        plan = plan_read(self._path, self._slots, manifests={
             p: tbl.read_manifest(self._path, p) for p in new})
         return [InputPartition(paths) for paths in plan.tasks]
 
@@ -883,9 +885,19 @@ class BlocksDataSource(DataSource):
     .save(out)`` (options ``batch_size``, ``residual``,
     ``long_strings``, ``sort``)."""
 
+    # Python tasks the readers plan for.  Spark runs schema/reader
+    # planning in a separate Python process with no SparkContext, so
+    # register_data_source binds the session's defaultParallelism here
+    # on a subclass that is pickled by value with the registration;
+    # None (the class used unregistered) means session.default_cores().
+    slots: int | None = None
+
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
+
+    def _slots(self) -> int:
+        return self.slots or default_cores()
 
     def schema(self) -> str:
         worker_setup()
@@ -898,7 +910,7 @@ class BlocksDataSource(DataSource):
 
     def reader(self, schema) -> BlocksReader:
         worker_setup()
-        return BlocksReader(schema, self.options)
+        return BlocksReader(schema, self.options, self._slots())
 
     def writer(self, schema, overwrite: bool) -> BlocksArrowWriter:
         worker_setup()
@@ -910,7 +922,7 @@ class BlocksDataSource(DataSource):
 
     def streamReader(self, schema) -> BlocksStreamReader:
         worker_setup()
-        return BlocksStreamReader(schema, self.options)
+        return BlocksStreamReader(schema, self.options, self._slots())
 
 
 def register_data_source(spark) -> None:
@@ -918,9 +930,13 @@ def register_data_source(spark) -> None:
 
     Also enables ``spark.sql.python.filterPushdown.enabled`` (a runtime
     SQL conf, default false in 4.1): with it off, Spark refuses any
-    Python reader that implements ``pushFilters``."""
+    Python reader that implements ``pushFilters``.  The registered
+    class carries the session's ``defaultParallelism`` as the readers'
+    slot count, the same count ``decode()`` plans for."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(BlocksDataSource)
+    spark.dataSource.register(type(
+        BlocksDataSource.__name__, (BlocksDataSource,),
+        {"slots": spark.sparkContext.defaultParallelism}))
 
 
 def read_blocks(spark, output: str, columns: list[str] | None = None,

@@ -270,8 +270,14 @@ def decode(spark: SparkSession, output: str,
     # selection names the schema, never committed_parts()'s oldest
     # entry, which may be a non-live pre-overwrite part (code-review r5)
     schema_pid = plan.part_ids[0] if plan.part_ids else max(plan.selected)
-    cols, ddl = _columns_and_ddl(plan.selected[schema_pid], columns,
-                                 include_derived, output)
+    manifest = plan.selected[schema_pid]
+    cols, _ = _columns_and_ddl(manifest, columns, include_derived, output)
+    # the exact row predicates below need their columns even where
+    # ``columns`` leaves them out: read those too, drop them after
+    extra = list(dict.fromkeys(
+        c for c, _, _ in filters or () if c not in cols))
+    read_cols, ddl = _columns_and_ddl(manifest, cols + extra,
+                                      include_derived, output)
 
     # One stage, no exchange: the driver placed the pruned files on
     # tasks (plan_read), task t reads tasks[t] from the closure and
@@ -285,7 +291,7 @@ def decode(spark: SparkSession, output: str,
         for b in batches:
             for t in b.column("id").to_pylist():
                 for path in tasks[t]:
-                    yield from read_blocks_file(path, cols)
+                    yield from read_blocks_file(path, read_cols)
 
     out = (spark.range(len(tasks), numPartitions=max(1, len(tasks)))
            .mapInArrow(_decode_files, schema=ddl))
@@ -296,7 +302,7 @@ def decode(spark: SparkSession, output: str,
             out = out.filter((F.col(c) >= v[0]) & (F.col(c) <= v[1]))
         else:
             out = out.filter(_OPS[op](F.col(c), v))
-    return out
+    return out.select(*cols) if extra else out
 
 
 _OPS = {

@@ -23,11 +23,10 @@ def _host_heap() -> str:
 
 def default_cores() -> int:
     """The core count a session uses when none is given:
-    ``SPARK_GRAFT_CPUS``, else the host's CPU count.  Spark's DataSource
-    planner processes have no SparkContext to ask for
-    ``defaultParallelism``, so the ``vcfblocks`` readers take their slot
-    count from here too; the variable reaches them through the JVM's
-    environment."""
+    ``SPARK_GRAFT_CPUS``, else the host's CPU count.  The ``vcfblocks``
+    readers plan for the registering session's ``defaultParallelism``
+    (``datasource.register_data_source``) and fall back to this only
+    when the data source class is used unregistered."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
 
 
