@@ -832,8 +832,8 @@ def _write_baseline_md(s: dict) -> None:
         "Memcpy bandwidth is even less stable (ranges 6–66 GB/s at 8",
         "procs across windows).  Levels 2→8 sit in the host's linear",
         "region, so the measurement reflects the engine's plan",
-        "(one bounded shuffle keyed by salted work units, broadcast plan",
-        "table, no driver bottleneck, no global locks) rather than the",
+        "(one bounded shuffle keyed by salted work units, the plan in the",
+        "task closure, no driver bottleneck, no global locks) rather than the",
         "sandbox's memory ceiling.",
         "",
         "Σudf = total in-kernel seconds summed over partition manifests.",
@@ -845,7 +845,7 @@ def _write_baseline_md(s: dict) -> None:
         "Clustered: unit plan (footer metadata) → checkpoint filter →",
         "rowgroup read in-worker → sort → profile → codec-select →",
         "encode kernels → atomic commit.  Shuffle: plan aggregate →",
-        "checkpoint filter → broadcast join → repartitionById(task) →",
+        "checkpoint filter → map-side part ids → repartitionById(task) →",
         "sort → same kernel stages.",
         "",
         "Regenerate: `python bench.py --scaling` (env: SPARK_GRAFT_SCALE_N,",

@@ -14,7 +14,7 @@ does it once, untimed).
 
 Besides wall seconds, the level reports the engine's own compute
 budget split by pipeline segment (summed over the best run's
-manifests + map-side pack side-files):
+manifests, plus the map-side pack seconds its job dict returns):
 
 * ``pack_seconds``   — map-side zstd-1 Arrow-IPC packing (shuffle path)
 * ``ipc_seconds``    — reduce-side blob unpack (memcpy/zstd-decode path)
@@ -35,9 +35,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _collect_metrics(out: str) -> dict:
-    """Sum per-segment seconds over one finished run's manifests and
-    pack side-files."""
+def _collect_metrics(out: str, job: dict) -> dict:
+    """Sum per-segment seconds over one finished run's manifests; the
+    pack seconds come from its job dict."""
     udf = 0.0
     ipc = 0.0
     stages: dict[str, float] = {}
@@ -48,12 +48,8 @@ def _collect_metrics(out: str) -> dict:
         ipc += m.get("ipc_seconds", 0.0)
         for k, v in m.get("stage_seconds", {}).items():
             stages[k] = stages.get(k, 0.0) + v
-    pack = 0.0
-    for f in glob.glob(f"{out}/pack_metrics/*.json"):
-        with open(f) as fh:
-            pack += json.load(fh)["pack_seconds"]
     return {"udf_seconds": round(udf, 1),
-            "pack_seconds": round(pack, 1),
+            "pack_seconds": round(job.get("pack_seconds", 0.0), 1),
             "ipc_seconds": round(ipc, 1),
             "stage_seconds": {k: round(v, 1) for k, v in stages.items()}}
 
@@ -113,7 +109,7 @@ def main() -> int:
         dt, j = runner(spark, corpus, out, target_rows=args.target_rows,
                        **extra)
         if dt < best:
-            best, job, best_metrics = dt, j, _collect_metrics(out)
+            best, job, best_metrics = dt, j, _collect_metrics(out, j)
     spark.stop()
     print(json.dumps({
         "seconds": round(best, 3),

@@ -113,6 +113,87 @@ def test_verify_null_keys_and_content(spark, tmp_path):
     assert res["rows_in"] == res["rows_out"] == 4
 
 
+def _corpus_table(repo, path=None, commit=None):
+    import pyarrow as pa
+    n = len(repo)
+    return pa.table({
+        "repo": pa.array(repo, pa.string()),
+        "path": pa.array(path or [f"p{i}.py" for i in range(n)], pa.string()),
+        "commit": pa.array(commit or [f"{i:040x}" for i in range(n)],
+                           pa.string()),
+        "lang": pa.array(["py"] * n, pa.string()),
+        "content": pa.array([f"x = {i}" for i in range(n)], pa.string())})
+
+
+def test_part_ids_match_salted_join_reference(spark, tmp_path):
+    """encode()'s packer gives each row the part id
+    ``base_part_id + pmod(xxhash64(path, commit), fanout)`` of its repo's
+    plan row: with a NULL repo, NULL paths and commits, a hot salted repo
+    and negative hashes, the manifests' per-part row counts equal a
+    Spark groupBy over that expression joined null-safe to the plan.
+    The packers' seconds come back in the job dict, not as files in the
+    table."""
+    from pyspark.sql import functions as F
+
+    from vcf2parquet_spark.encode import plan_partitions_arrow
+
+    n = 120
+    repo = ["hot"] * 90 + [None] * 6 + [f"r{i % 8}" for i in range(24)]
+    path = [None if i % 7 == 0 else f"p{i}.py" for i in range(n)]
+    commit = [None if i % 11 == 0 else f"{i:040x}" for i in range(n)]
+    df = spark.createDataFrame(_corpus_table(repo, path, commit))
+    out = str(tmp_path / "blocks")
+    job = encode(spark, df, out, target_rows=20)
+    got = {pid: m["n_rows"] for pid, m in tbl.committed_parts(out).items()}
+
+    agg = df.groupBy("repo").agg(F.count("*").alias("cnt")).toArrow()
+    plan, _, _ = plan_partitions_arrow(agg.column("repo"),
+                                       agg.column("cnt"), 20)
+    plan_df = spark.createDataFrame(plan).withColumnRenamed("repo", "_r")
+    salt = F.xxhash64("path", "commit")
+    ref = (df.join(plan_df, F.col("repo").eqNullSafe(F.col("_r")))
+           .withColumn("pid", F.col("base_part_id")
+                       + F.when(F.col("fanout") > 1,
+                                F.pmod(salt, F.col("fanout")))
+                       .otherwise(F.lit(0))))
+    hot = ref.filter(F.col("fanout") > 1).agg(
+        F.min(salt).alias("lo"), F.countDistinct("pid").alias("k")).first()
+    assert hot["lo"] < 0 and hot["k"] > 1, hot
+    want = {r["pid"]: r["count"] for r in ref.groupBy("pid").count().collect()}
+    assert got == want
+    assert job["n_rows"] == n
+    assert job["pack_seconds"] > 0
+    assert not os.path.exists(os.path.join(out, "pack_metrics"))
+
+
+def test_input_changed_after_planning_raises(spark, tmp_path, monkeypatch):
+    """A repo the plan does not hold — the input changed between the
+    repo count and the encode job — raises ResumeError naming the repo
+    instead of encoding fewer rows without an error."""
+    import importlib
+
+    import pyarrow.compute as pc
+
+    # the package re-exports encode(), which shadows the module name
+    enc = importlib.import_module("vcf2parquet_spark.encode")
+    real = enc.plan_partitions_arrow
+
+    def drop_one(repo, cnt, target_rows, offset=0):
+        plan, next_id, unit_rows = real(repo, cnt, target_rows, offset)
+        keep = pc.fill_null(pc.not_equal(plan.column("repo"), "org/r01"),
+                            True)
+        return plan.filter(keep), next_id, unit_rows
+
+    monkeypatch.setattr(enc, "plan_partitions_arrow", drop_one)
+    df = spark.createDataFrame(
+        _corpus_table([f"org/r{i % 6:02d}" for i in range(30)]))
+    with pytest.raises(Exception, match=r"ResumeError: repo 'org/r01' is "
+                                        r"not in this encode's partition "
+                                        r"plan: the input changed after "
+                                        r"planning"):
+        encode(spark, df, str(tmp_path / "blocks"), target_rows=5)
+
+
 def test_determinism_across_parallelism(spark, corpus, tmp_path):
     """Block bytes must be identical no matter the input partitioning
     (SURVEY §7 'byte-determinism of encoded blocks across partition

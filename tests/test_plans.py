@@ -4,6 +4,8 @@ and projections pushed into the parquet scan, no stray shuffles."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -20,23 +22,6 @@ def corpus_path(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("plan") / "corpus.parquet")
     synth_corpus(spark, 2000, seed=42).write.parquet(p)
     return p
-
-
-def test_encode_plan_broadcasts_partition_plan(spark, corpus_path):
-    """The work-unit assignment join must be broadcast (tiny plan side),
-    never a sort-merge join shuffling the corpus."""
-    from vcf2parquet_spark.encode import plan_partitions
-    df = spark.read.parquet(corpus_path)
-    counts = [(r["repo"], r["cnt"]) for r in
-              df.groupBy("repo").agg(F.count("*").alias("cnt")).collect()]
-    plan, _ = plan_partitions(counts, 1000)
-    plan_df = spark.createDataFrame(
-        [(p["repo"], p["base_part_id"], p["fanout"]) for p in plan],
-        "repo string, base_part_id int, fanout int")
-    joined = df.join(F.broadcast(plan_df), "repo")
-    s = _plan(joined)
-    assert "BroadcastHashJoin" in s
-    assert "SortMergeJoin" not in s
 
 
 def test_decode_scan_pushes_partition_filter(spark, corpus_path, tmp_path):
@@ -113,20 +98,23 @@ def test_exact_dedup_single_shuffle(spark):
 def test_encode_shuffle_has_single_sort(spark, corpus_path, tmp_path):
     """encode's exchange shape: map-side mapInArrow packer →
     repartitionById(task) → sortWithinPartitions(part_id) → reduce-side
-    mapInArrow plans exactly one Sort node and one data exchange, which
+    mapInArrow plans exactly one Sort node and one exchange, which
     places each blob on its planned task — no hash exchange, no second
-    sort or exchange around either Python stage."""
+    sort or exchange around either Python stage, and no join: the packer
+    computes part ids from the plan in its closure, so nothing is
+    broadcast."""
     from vcf2parquet_spark.encode import EncodeOptions, _encode_job
 
-    job_df, _ = _encode_job(spark, spark.read.parquet(corpus_path),
-                            str(tmp_path / "blocks"),
-                            EncodeOptions(target_rows=500))
+    job_df, _, _ = _encode_job(spark, spark.read.parquet(corpus_path),
+                               str(tmp_path / "blocks"),
+                               EncodeOptions(target_rows=500))
     s = _plan(job_df, "simple")
     assert s.count("+- Sort") == 1, s
-    assert s.count("+- Exchange ") == 1, s      # the plan side broadcasts
+    assert s.count("Exchange") == 1, s
     assert "Exchange shufflepartitionidpassthrough" in s, s
     assert "REPARTITION_BY_NUM" in s, s
     assert "hashpartitioning" not in s, s
+    assert "Join" not in s and "BroadcastExchange" not in s, s
 
 
 def test_encode_clustered_plans_no_exchange(spark, corpus_path, tmp_path):
@@ -224,23 +212,29 @@ def test_multimodal_ops_are_narrow_maps(spark):
         assert "MapInPandas" in s, s
 
 
-def test_checkpoint_filters_are_joins_not_literal_isin(spark, corpus_path,
-                                                       tmp_path):
-    """Resume filtering must be a broadcast anti-join and the decode
-    scan an explicit committed-file list — never a literal In over
-    part ids (plan bloat + O(n)/row at 1e4-1e5 committed partitions)."""
+def test_checkpoint_filters_are_not_literal_isin(spark, corpus_path,
+                                                 tmp_path):
+    """A resumed encode and the decode scan never filter on a literal In
+    over part ids (plan bloat + O(n)/row at 1e4-1e5 committed
+    partitions): the resumed encode's packer drops committed units'
+    rows by their planned task, and decode reads an explicit committed
+    file list."""
+    from vcf2parquet_spark import table as tbl
     from vcf2parquet_spark.decode import decode
-    from vcf2parquet_spark.encode import anti_join_committed, encode
+    from vcf2parquet_spark.encode import EncodeOptions, _encode_job, encode
 
     out = str(tmp_path / "blocks")
     df = spark.read.parquet(corpus_path)
-    encode(spark, df, out, target_rows=500)
-
-    wp = df.withColumn("part_id",
-                       F.pmod(F.xxhash64("path"), F.lit(10)).cast("int"))
-    s = _plan(anti_join_committed(spark, wp, {0, 1, 2}), "simple")
-    assert "LeftAnti" in s and "BroadcastHashJoin" in s, s
+    job = encode(spark, df, out, target_rows=500)
+    # resume with the first half of the parts committed
+    for pid in range(job["n_partitions"] // 2, job["n_partitions"]):
+        os.remove(tbl.manifest_path(out, pid))
+        os.remove(tbl.data_path(out, pid))
+    job_df, _, _ = _encode_job(spark, df, out, EncodeOptions(target_rows=500))
+    assert job_df is not None
+    s = _plan(job_df, "simple")
     assert "part_id IN" not in s and "In(part_id" not in s, s
+    assert "Join" not in s, s
 
     s = _plan(decode(spark, out), "simple")
     assert "part_id IN" not in s and "In(part_id" not in s, s
@@ -453,8 +447,8 @@ print(json.dumps(steps))
 
 
 def test_decode_and_resumed_encode_start_one_python_daemon(tmp_path):
-    """In a fresh session, encode, a resumed encode (its broadcast
-    committed-part side) and decode (a full and an all-pruned read)
+    """In a fresh session, encode, a resumed encode (its packer drops
+    the committed part's rows) and decode (a full and an all-pruned read)
     run every Python task on one ``pyspark.daemon``: none of them
     starts the second daemon a pickled-row stage needs."""
     import json

@@ -9,24 +9,25 @@ Spark-first dataflow (SURVEY.md §3.4), designed for 1000-executor /
    into ``ceil(rows/target)`` units (explicit skew handling for hot
    repos — the north rule requirement AQE alone can't give us, because
    each unit must be a durable, resumable manifest); small repos are
-   bundled into shared units.  The plan is a small DataFrame that is
-   **broadcast** — no shuffle of the big side for the join.
-2. **Checkpoint filter**: committed partition ids (from the manifest
-   dir) are anti-filtered out — exact resume; re-running after a crash
-   encodes only missing partitions.
+   bundled into shared units.  The plan's columns (repo, base part id,
+   fanout) ride the packer's closure; no plan DataFrame, no join.
+2. **Checkpoint filter** (driver): committed partition ids (from the
+   manifest dir) get no task — exact resume; re-running after a crash
+   encodes only missing partitions.  The packer drops their rows.
 3. **One shuffle onto planned tasks**: the driver places the units on
    ``min(units, defaultParallelism)`` tasks, largest planned row count
    first onto the least-loaded task (``table.assign_tasks`` — one Python
    task per slot, so no slot idles while another stacks units); a
-   map-side ``mapInArrow`` packs each (input batch × part_id) group into
+   map-side ``mapInArrow`` computes each row's part id from the plan
+   and packs each (input batch × part_id) group into
    one zstd-compressed Arrow-IPC blob tagged with its task;
    ``repartitionById('task')`` + ``sortWithinPartitions('part_id')``
    make each work unit contiguous in its planned task; a reduce-side
    ``mapInArrow`` cuts the stream at part_id boundaries and encodes each
    unit entirely in Arrow (zero pandas/Python-object materialization —
    the ``input_hint``'s "vectorized Arrow UDFs, no per-row Python").
-4. **Inside the UDF** (executor, per partition): sort by (repo, path,
-   commit, content) so block bytes are independent of shuffle
+4. **Inside the encode UDF** (executor, per work unit): sort by (repo,
+   path, commit, content) so block bytes are independent of shuffle
    nondeterminism; profile columns; auto-select codecs; derive integer
    columns (size_bytes, n_lines → bit-pack/FOR); encode in row batches
    of ``batch_size`` (default 100_000 — the reference's default,
@@ -37,28 +38,28 @@ Scale notes: executor-side file writes target shared storage (local FS
 here; pyarrow.fs handles s3://... URIs identically on a real cluster —
 or swap step 4's sink for an Iceberg ``writeTo`` once the runtime jar
 is present).  The only shuffle moves each row exactly once, partition
-sizes are bounded by construction (salting), and the small plan/
-checkpoint tables are broadcast, so the job scales linearly with
-executors until the shuffle fabric saturates.
+sizes are bounded by construction (salting), and the plan travels in
+the task closure (pyspark broadcasts a pickled command over 1 MB by
+itself), so the job scales linearly with executors until the shuffle
+fabric saturates.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
-import shutil
 import time
 from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from vcf2parquet_spark import table as tbl
 from vcf2parquet_spark._alloc import worker_setup
-from vcf2parquet_spark.errors import SchemaError
+from vcf2parquet_spark.errors import ResumeError, SchemaError
 from vcf2parquet_spark.kernels import encode_column
 from vcf2parquet_spark.profile import profile_arrow
 from vcf2parquet_spark.select import choose_codecs
@@ -258,22 +259,6 @@ def plan_partitions(counts: list[tuple[str, int]], target_rows: int,
     rows = [{"repo": r, "base_part_id": b, "fanout": f}
             for r, b, f in zip(d["repo"], d["base_part_id"], d["fanout"])]
     return rows, next_id
-
-
-def anti_join_committed(spark: SparkSession, with_part: DataFrame,
-                        committed: set[int]) -> DataFrame:
-    """Drop rows of already-committed partitions via a broadcast
-    left_anti join, NOT a literal ``isin``: a long-lived table has
-    1e4-1e5 committed partitions, and inlining them as expression
-    literals explodes the plan (and costs O(n) per row); the anti-join
-    against a small broadcast side is O(1) per row and keeps the plan
-    constant-size (SURVEY.md §2.12 prescription).  The broadcast side
-    is built from an Arrow table: a Python-list ``createDataFrame``
-    would run a pickled-row stage on a second Python daemon for every
-    resumed encode and streaming micro-batch."""
-    committed_df = spark.createDataFrame(pa.table(
-        {"part_id": pa.array(sorted(committed), pa.int64())}))
-    return with_part.join(F.broadcast(committed_df), "part_id", "left_anti")
 
 
 def _derive_int_columns(t: pa.Table) -> pa.Table:
@@ -633,38 +618,41 @@ def encode(spark: SparkSession, df: DataFrame, output: str,
     """Encode ``df`` (corpus-shaped) into ``output``. Returns job summary.
 
     kwargs are EncodeOptions fields (batch_size=, codec_overrides=, ...).
+
+    Beyond the table summary, the returned dict carries ``pack_seconds``:
+    the map-side packers' seconds, summed through a Spark accumulator.
+    A retried map task adds its seconds again; that is accepted for a
+    diagnostic.  It is not written into the table.
     """
     opts = opts or EncodeOptions(**kwargs)
     tbl.init_layout(output)
-    job_df, n_parts = _encode_job(spark, df, output, opts)
-    # fresh per-job pack metrics: these side-files are run diagnostics,
-    # not table state — nothing else cleans them, and stale files from a
-    # previous run of this output would double-count in the scaling
-    # report's segment split
-    shutil.rmtree(os.path.join(output, "pack_metrics"), ignore_errors=True)
+    job_df, n_parts, pack_acc = _encode_job(spark, df, output, opts)
     summaries = job_df.collect() if job_df is not None else []
-    return _finalize_job(output, opts, df.columns, n_parts, summaries)
+    job = _finalize_job(output, opts, df.columns, n_parts, summaries)
+    job["pack_seconds"] = round(pack_acc.value, 4)
+    return job
 
 
 def _encode_job(spark: SparkSession, df: DataFrame, output: str,
-                opts: EncodeOptions) -> tuple[DataFrame | None, int]:
+                opts: EncodeOptions
+                ) -> tuple[DataFrame | None, int, Accumulator]:
     """Plan :func:`encode`'s units and build (not run) its one-exchange
     job: (summary-row DataFrame, or None when every unit is already
-    committed; next free part id)."""
+    committed; next free part id; the accumulator the packers add
+    their seconds to)."""
     import numpy as np
 
     schema_columns = df.columns
+    pack_acc = spark.sparkContext.accumulator(0.0)
 
     # 1. partition plan from the tiny repo-count aggregate — collected
     # as ARROW (toArrow), not Rows: at 10^7-10^8 repos a Row collect is
-    # multi-GB of Python objects; the Arrow table feeds the numpy
-    # planner and goes straight back via createDataFrame(pa.Table),
-    # zero per-repo Python objects end-to-end
+    # multi-GB of Python objects; the plan's columns ride the packer's
+    # closure as Arrow/numpy buffers
     agg = df.groupBy("repo").agg(F.count("*").alias("cnt")).toArrow()
     plan_tbl, n_parts, unit_rows = plan_partitions_arrow(
         agg.column("repo"), agg.column("cnt"), opts.target_rows,
         offset=opts.part_id_offset)
-    plan_df = spark.createDataFrame(plan_tbl)
 
     # 2. checkpoint: skip committed partitions (exact resume)
     committed = set(tbl.committed_parts(output)) if opts.resume else set()
@@ -672,36 +660,20 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
     todo = np.setdiff1d(np.arange(off, n_parts, dtype=np.int64),
                         np.fromiter(committed, np.int64, len(committed)))
     if not len(todo):
-        return None, n_parts
+        return None, n_parts, pack_acc
 
     # 3. place units on tasks by planned rows: one Python task per slot
     # (see table.assign_tasks); unit_task[pid - off] is the task of
-    # unit pid
+    # unit pid, -1 for a unit that does not run (committed)
     task_of, n_tasks = tbl.assign_tasks(
         unit_rows[todo - off], spark.sparkContext.defaultParallelism)
     unit_task = np.full(n_parts - off, -1, np.int32)
     unit_task[todo - off] = task_of
+    plan_repo = plan_tbl.column("repo").combine_chunks()
+    plan_base = plan_tbl.column("base_part_id").to_numpy()
+    plan_fanout = plan_tbl.column("fanout").to_numpy().astype(np.int64)
 
-    # 4. assign part ids: broadcast join + deterministic salt for hot
-    # repos.  Null-SAFE on repo (still a BroadcastHashJoin — Spark
-    # treats eqNullSafe as an equi-join key): a name-list join would
-    # silently DROP every NULL-repo row from the encode.
-    plan_r = plan_df.withColumnRenamed("repo", "_plan_repo")
-    with_part = (
-        df.join(F.broadcast(plan_r),
-                F.col("repo").eqNullSafe(F.col("_plan_repo")))
-        .drop("_plan_repo")
-        .withColumn(
-            "part_id",
-            (F.col("base_part_id")
-             + F.when(F.col("fanout") > 1,
-                      F.pmod(F.xxhash64("path", "commit"), F.col("fanout")))
-              .otherwise(F.lit(0))).cast("long"))
-        .drop("base_part_id", "fanout"))
-    if committed:
-        with_part = anti_join_committed(spark, with_part, committed)
-
-    # 5. one exchange to the planned tasks, encode each unit in Arrow
+    # 4. one exchange to the planned tasks, encode each unit in Arrow
 
     def _materialize(parts: list) -> pa.Table:
         """One work unit's collected shuffle slices → its row table.
@@ -720,7 +692,7 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
             for i in range(len(blob_col)):
                 tables.append(pa.ipc.open_stream(
                     blob_col[i].as_buffer()).read_all())
-        return pa.concat_tables(tables).drop_columns(["part_id"])
+        return pa.concat_tables(tables)
 
     def _encode_stream(batches):
         """mapInArrow kernel: consume the task's (part_id-sorted) batch
@@ -771,7 +743,8 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
             yield out
 
     def _pack_stream(batches):
-        """Map-side packer: group each input Arrow batch's rows by
+        """Map-side packer: compute each row's part id from the plan,
+        drop the rows of units that do not run, group the rest by
         part_id and emit ONE row per (batch, part_id) group — a
         zstd-1-compressed Arrow-IPC blob holding the group's rows,
         tagged with the unit's planned task.  The
@@ -783,22 +756,49 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
         IPC memcpy budget, which Spark never compresses.  Vectorized:
         one argsort + one IPC write per group, no per-row Python.
 
-        Map-side seconds (the loop body only — waiting on the upstream
-        scan/join iterator is NOT pack work) are written to
-        ``{output}/pack_metrics/pack_<taskPartitionId>.json`` so the
-        scaling report can split the engine's compute budget into
-        map-side pack vs reduce-side kernel segments."""
+        Part id of a row: ``base_part_id + pmod(xxhash64(path, commit),
+        fanout)`` of its repo's plan row (the hash arrives as ``_salt``;
+        numpy's ``%`` by a positive divisor is Spark's ``pmod``, and
+        fanout 1 gives 0).  The lookup is a repo → plan-row ``dict``
+        built once per task (0.09 s at 10^5 plan repos, 1.4 s at 10^6;
+        ``scripts/pack_lookup_probe.py``) and probed only with each
+        batch's DISTINCT repos (``dictionary_encode`` then ``take``), so
+        its per-batch cost follows the batch, not the plan
+        (``pc.index_in`` hashes the whole plan on every batch: 0.14 s
+        per 100k-row batch at 10^6).  NULL is a repo like any other.  A
+        repo missing from the plan means the input changed between the
+        count job and this one: ResumeError, not a silently smaller
+        encode.
+
+        Map-side seconds (the work per batch — waiting on the upstream
+        scan iterator is NOT pack work) go to the ``pack_acc``
+        accumulator."""
         import numpy as np
-        from pyspark import TaskContext
 
         worker_setup(opts.arrow_cpu)
         ipc_opts = pa.ipc.IpcWriteOptions(compression=pa.Codec("zstd", 1))
-        pack_s = 0.0
+        t0 = time.time()
+        row_of = {r: i for i, r in enumerate(plan_repo.to_pylist())}
+        pack_s = time.time() - t0
         for b in batches:
             tb0 = time.time()
-            pids = b.column("part_id").to_numpy(zero_copy_only=False)
-            order = np.argsort(pids, kind="stable")
-            bs = b.take(pa.array(order))
+            # the plan's keys are cast to string too (plan_partitions_arrow)
+            repo = b.column("repo").cast(pa.string()).dictionary_encode(
+                null_encoding="encode")
+            try:
+                rows = np.asarray([row_of[r] for r in
+                                   repo.dictionary.to_pylist()], np.int64)
+            except KeyError as e:
+                raise ResumeError(
+                    f"repo {e.args[0]!r} is not in this encode's partition "
+                    "plan: the input changed after planning (between the "
+                    "repo count and the encode job)") from None
+            row = rows[repo.indices.to_numpy(zero_copy_only=False)]
+            salt = b.column("_salt").to_numpy(zero_copy_only=False)
+            pids = plan_base[row] + salt % plan_fanout[row]
+            keep = np.flatnonzero(unit_task[pids - off] >= 0)
+            order = keep[np.argsort(pids[keep], kind="stable")]
+            bs = b.drop_columns(["_salt"]).take(pa.array(order))
             ps = pids[order]
             cuts = (np.flatnonzero(ps[1:] != ps[:-1]) + 1).tolist()
             bounds = [0, *cuts, len(ps)]
@@ -827,17 +827,7 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
                 yield out_b
             else:
                 pack_s += time.time() - tb0
-        tc = TaskContext.get()
-        mdir = os.path.join(output, "pack_metrics")
-        os.makedirs(mdir, exist_ok=True)
-        # keyed by the task's partition id, written via the table's
-        # tmp+rename primitive: a retried/speculative attempt replaces
-        # its predecessor atomically instead of double-counting — or
-        # tearing the JSON under a concurrent zombie attempt, which
-        # would crash the scaling report's collector
-        tbl.atomic_write_bytes(
-            os.path.join(mdir, f"pack_{tc.partitionId() if tc else 0}.json"),
-            json.dumps({"pack_seconds": round(pack_s, 4)}).encode())
+        pack_acc.add(pack_s)
 
     # repartitionById places each blob on exactly its planned task (a
     # hash or round-robin exchange would stack units on some tasks and
@@ -845,13 +835,13 @@ def _encode_job(spark: SparkSession, df: DataFrame, output: str,
     # part_id boundaries, so units must be contiguous inside a task —
     # the rows themselves are sorted inside encode_partition (the blobs
     # are opaque to the exchange)
-    job_df = (with_part
+    job_df = (df.withColumn("_salt", F.xxhash64("path", "commit"))
               .mapInArrow(_pack_stream,
                           schema="part_id long, task int, blob binary")
               .repartitionById(n_tasks, "task")
               .sortWithinPartitions(F.col("part_id"))
               .mapInArrow(_encode_stream, schema=SUMMARY_SCHEMA))
-    return job_df, n_parts
+    return job_df, n_parts, pack_acc
 
 
 def _finalize_job(output: str, opts: EncodeOptions,
