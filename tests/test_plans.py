@@ -100,9 +100,7 @@ def test_encode_shuffle_has_single_sort(spark, corpus_path, tmp_path):
     repartitionById(task) → sortWithinPartitions(part_id) → reduce-side
     mapInArrow plans exactly one Sort node and one exchange, which
     places each blob on its planned task — no hash exchange, no second
-    sort or exchange around either Python stage, and no join: the packer
-    computes part ids from the plan in its closure, so nothing is
-    broadcast."""
+    sort or exchange around either Python stage."""
     from vcf2parquet_spark.encode import EncodeOptions, _encode_job
 
     job_df, _, _ = _encode_job(spark, spark.read.parquet(corpus_path),
@@ -114,6 +112,21 @@ def test_encode_shuffle_has_single_sort(spark, corpus_path, tmp_path):
     assert "Exchange shufflepartitionidpassthrough" in s, s
     assert "REPARTITION_BY_NUM" in s, s
     assert "hashpartitioning" not in s, s
+
+
+def test_encode_plan_broadcasts_partition_plan(spark, corpus_path, tmp_path):
+    """The work-unit assignment must never shuffle the corpus to meet the
+    partition plan: the plan is shipped to every task inside the packer's
+    closure, so encode's plan has no join of any kind — neither a
+    sort-merge join nor a broadcast exchange of a plan DataFrame."""
+    from vcf2parquet_spark.encode import EncodeOptions, _encode_job
+
+    job_df, n_parts, _ = _encode_job(spark, spark.read.parquet(corpus_path),
+                                     str(tmp_path / "blocks"),
+                                     EncodeOptions(target_rows=500))
+    assert n_parts > 1
+    s = _plan(job_df, "simple")
+    assert "SortMergeJoin" not in s, s
     assert "Join" not in s and "BroadcastExchange" not in s, s
 
 
